@@ -28,7 +28,13 @@ import org.apache.hadoop.fs.permission.FsPermission
   * `fs.AbstractFileSystem.file.impl` (the FileContext API, which the
   * streaming checkpoint manager uses). Object-store and HDFS schemes
   * never load this class, so production deployments are unaffected;
-  * the configs are set only by this repo's local-mode entry points. */
+  * the configs are set only by this repo's local-mode entry points.
+  *
+  * Visibility change: without the checksum layer, `listStatus` no
+  * longer hides `.crc` sidecars, so a directory written earlier by a
+  * stock `LocalFileSystem` lists its `.name.crc` files too.
+  * `TableStore`'s recursive `file:` listing skips them; any other
+  * unfiltered listing of such a directory sees them. */
 class FastRawLocalFileSystem extends RawLocalFileSystem {
   // RawLocalFileSystem inherits FileSystem.getScheme's throwing default
   // (only the ChecksumFileSystem wrapper overrides it upstream)

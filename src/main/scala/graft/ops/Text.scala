@@ -92,11 +92,13 @@ object Text {
     // the common minDocs=2 threshold is just "appears in ≥2 distinct
     // docs" ⟺ min(id) ≠ max(id): plain partial-aggregable min/max
     // instead of count_distinct's Expand + two-phase distinct aggregate;
-    // higher thresholds keep the honest distinct count
-    val boiler = (if (minDocs <= 2)
+    // every other threshold keeps the honest distinct count (which, like
+    // min/max, ignores null ids: a line seen only under null ids has
+    // df = 0, so it is never boilerplate for minDocs >= 1)
+    val boiler = (if (minDocs == 2)
         lines.groupBy("line")
           .agg(min(col(idCol)).as("mn"), max(col(idCol)).as("mx"))
-          .filter(if (minDocs == 2) col("mx") > col("mn") else lit(true))
+          .filter(col("mx") > col("mn"))
       else
         lines.groupBy("line")
           .agg(countDistinct(col(idCol)).as("df"))

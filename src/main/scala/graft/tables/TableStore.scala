@@ -7,7 +7,7 @@ import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRela
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftshim.Bridge
-import org.apache.spark.sql.types.{BooleanType, IntegerType, LongType, StringType, StructField, StructType, TimestampType}
+import org.apache.spark.sql.types.{BooleanType, ByteType, DateType, IntegerType, LongType, ShortType, StringType, StructField, StructType, TimestampNTZType, TimestampType}
 
 /** Parquet-backed managed table with Iceberg-like snapshot semantics,
   * re-providing the reference's table layer (no Iceberg jars in this
@@ -2069,7 +2069,10 @@ final class TableStore(private[tables] val spark: SparkSession,
       q.add(dir)
       while (!q.isEmpty) {
         fs.listStatus(q.poll()).foreach { st =>
-          if (st.isDirectory) q.add(st.getPath) else buf += st
+          if (st.isDirectory) q.add(st.getPath)
+          // checksum sidecars a stock LocalFileSystem run left behind:
+          // FastRawLocalFileSystem's listing no longer hides them
+          else if (!st.getPath.getName.endsWith(".crc")) buf += st
         }
       }
     } else {
@@ -2777,20 +2780,27 @@ final class TableStore(private[tables] val spark: SparkSession,
     * An UPDATE surfaces as delete(old row) + insert(new row) in the same
     * commit version (net-change semantics; no pre/post-image pairing).
     *
-    * Cost is proportional to each commit's CHANGED scope, never the
-    * table (the 100 TB requirement):
+    * Cost follows each commit's CHANGED scope:
     *  - a pure append reads exactly its appended files and labels them
     *    'insert' — zero joins, zero unchanged data touched;
     *  - a copy-on-write mutation reads only the files the commit removed
-    *    plus the files it added, and nets them with `exceptAll` (multiset
-    *    difference, duplicate-safe) — a compaction therefore contributes
-    *    NOTHING (its rewrite is row-preserving, the differences cancel),
-    *    at the price of reading the rewritten files twice;
-    *  - a merge-on-read delete commit widens the scope to the files both
-    *    snapshots share (an equality tombstone can mask rows in any
-    *    earlier file) and nets the masked reads — exact, with the zone/
-    *    bloom candidate pruning of the masked path; tightening this scope
-    *    to key-pruned candidates is a possible future optimization.
+    *    plus the files it added, and nets them in one signed multiset
+    *    difference (duplicate-safe, each side read once) — a compaction
+    *    therefore contributes NOTHING (its rewrite is row-preserving,
+    *    the differences cancel);
+    *  - a merge-on-read commit whose new deletes are equality deletes
+    *    over one key column, at most [[TableStore.BloomProbeMaxKeys]]
+    *    keys (a single-key `deleteMoR`, every `applyNet` batch) is
+    *    KEY-SCOPED: the parent side reads the removed files and each
+    *    shared file ONCE, keeping only the rows whose key the new
+    *    deletes name, and the new side reads only the added files. A
+    *    shared file is skipped only when the keys' envelope, bloom or
+    *    bucket rules it out; keys spread over the key range (the CDC
+    *    case) still read every shared file once (see [[keyScope]]);
+    *  - any other delete commit (positional/DV entries, several or
+    *    mixed key columns, more keys, a sidecar rewrite or a rollback)
+    *    reads the files both snapshots share twice, under each
+    *    snapshot's masks — exact, but proportional to the shared files.
     *
     * Rows removed purely by `expireSnapshots` retention never appear
     * (expiry rewrites no manifest). Legacy history without commit-parent
@@ -2870,9 +2880,11 @@ final class TableStore(private[tables] val spark: SparkSession,
   /** Metadata-only estimate of [[changeFeed]]'s READ SCOPE over
     * `(from, to]`: (bytes the feed would open, the live table's total
     * bytes at `to`, whether any commit mutates). Per commit: added +
-    * removed file bytes (the exceptAll net-change inputs), plus the
-    * shared files TWICE when the commit introduces delete entries (the
-    * masked pre/post reads). Costs one consolidated-stats read per
+    * removed file bytes (the net-change inputs), plus the shared files
+    * TWICE when the commit introduces delete entries (the full-scope
+    * masked pre/post reads; a key-scoped commit reads them once —
+    * quoted at the full-scope price all the same).
+    * Costs one consolidated-stats read per
     * version — no file opened. A consumer folding deltas (e.g.
     * materialized-view refresh) compares scope against total to decide
     * whether recompute is the cheaper plan; (0, 0, _) = stats
@@ -2948,31 +2960,106 @@ final class TableStore(private[tables] val spark: SparkSession,
     val prevS = prev.toSet
     val added = cur.filterNot(prevS)
     val removed = prev.filterNot(curS)
-    val newDeletes =
-      readDeleteEntries(name, v).toSet -- readDeleteEntries(name, parent).toSet
-    def label(df: DataFrame, tpe: String): DataFrame =
-      df.withColumn(TableStore.ChangeTypeCol, lit(tpe))
-        .withColumn(TableStore.CommitVersionCol, lit(v))
+    val curDel = readDeleteEntries(name, v)
+    val prevDel = readDeleteEntries(name, parent).toSet
+    val newDeletes = curDel.filterNot(prevDel)
     if (removed.isEmpty && newDeletes.isEmpty) {
       // pure append (or a metadata-only commit): the appended files ARE
       // the inserts — sequence rules say no earlier tombstone masks them
       if (added.isEmpty) emptyChanges(name, rowIds)
-      else label(readAppendedRels(name, added,
-        rowIdsAt = if (rowIds) Some(v) else None), "insert")
+      else readAppendedRels(name, added,
+          rowIdsAt = if (rowIds) Some(v) else None)
+        .withColumn(TableStore.ChangeTypeCol, lit("insert"))
+        .withColumn(TableStore.CommitVersionCol, lit(v))
     } else {
       val common = if (newDeletes.nonEmpty) cur.filter(prevS) else Nil
       // pin the column ORDER on both sides: the masked read surfaces its
-      // anti-join key columns first, and exceptAll matches POSITIONALLY —
-      // order drift would make identical rows fail to cancel
+      // anti-join key columns first, and the output keeps the table's
+      // order (the streaming source maps batch columns by position)
       val cols = (schema(name).fieldNames.toSeq ++
         (if (rowIds) Seq(TableStore.RowIdCol) else Nil))
         .map(n => col(s"`$n`"))
-      val before = readRelsMasked(name, removed ++ common, parent, rowIds)
-        .select(cols: _*)
-      val after = readRelsMasked(name, added ++ common, v, rowIds)
-        .select(cols: _*)
-      label(after.exceptAll(before), "insert")
-        .unionByName(label(before.exceptAll(after), "delete"))
+      def masked(rels: Seq[String], at: Int,
+          narrow: DataFrame => DataFrame = identity): DataFrame =
+        narrow(readRelsMasked(name, rels, at, rowIds)).select(cols: _*)
+      val scope =
+        if (newDeletes.isEmpty) None
+        else keyScope(name, v, common, prevDel, curDel, newDeletes)
+      val (before, after) = scope match {
+        case Some(inK) =>
+          (masked(removed, parent).unionByName(masked(common, parent, inK)),
+            masked(added, v))
+        case None =>
+          (masked(removed ++ common, parent), masked(added ++ common, v))
+      }
+      // net both ways in ONE signed pass, each side read once: a row's
+      // count at v minus its count at the parent, emitted |n| times as
+      // 'insert' (n > 0) or 'delete' (n < 0) — what after.exceptAll(
+      // before) and before.exceptAll(after) give, at half the scans and
+      // one shuffle instead of two
+      val n = "__graft_net"
+      after.withColumn(n, lit(1L))
+        .unionByName(before.withColumn(n, lit(-1L)))
+        .groupBy(cols: _*).agg(sum(col(n)).as(n))
+        .filter(col(n) =!= 0L)
+        .withColumn(n, explode(array_repeat(col(n), abs(col(n)).cast(IntegerType))))
+        .withColumn(TableStore.ChangeTypeCol,
+          when(col(n) > 0L, lit("insert")).otherwise(lit("delete")))
+        .withColumn(TableStore.CommitVersionCol, lit(v))
+        .drop(n)
+    }
+  }
+
+  /** Key scope of commit `v`'s net change over the files it shares with
+    * its parent (`common`). It applies when every delete entry new in
+    * `v` is an equality delete stamped with `v` over ONE key column of an
+    * integral, string, date or timestamp type (IN-list membership is
+    * exactly SQL equality there), no parent entry was dropped, every
+    * shared file predates `v`, and the new entries hold at most
+    * [[TableStore.BloomProbeMaxKeys]] keys. Let K be those keys. A shared
+    * row whose key is in K is then masked at `v` (its file's sequence is
+    * below `v`'s), and every other shared row reads the same at the
+    * parent and at `v`, so it cancels in the net change anyway. The
+    * parent-side read of the shared files can therefore keep only rows
+    * keyed in K, and the `v`-side read needs the added files alone.
+    *
+    * Returns that narrowing: K held on the driver as an IN list. A null
+    * key matches nothing, as under the anti-join mask. Each shared file
+    * is still read once unless the scan's zone index drops it: by the
+    * envelope [min, max] of K against the file's zone range, or by its
+    * bloom or bucket when the table has them. Keys spread over the key
+    * range — the CDC case — drop no file; the rows are filtered after
+    * the read. None = the full-scope fallback: positional or DV entries,
+    * several or mixed key columns, other key types, more keys, a sidecar
+    * rewrite or a rollback (whose entries carry older sequences). */
+  private def keyScope(name: String, v: Int, common: Seq[String],
+      prevDel: Set[DeleteEntry], curDel: Seq[DeleteEntry],
+      newDel: Seq[DeleteEntry]): Option[DataFrame => DataFrame] = {
+    val pcols = newDel.head.cols
+    val inv = invPhysMap(name)
+    val key = pcols match {
+      case Seq(p) if !TableStore.isPosEntry(pcols) => inv.get(p)
+      case _ => None
+    }
+    val eligible = key.exists(k => schema(name)(k).dataType match {
+        case ByteType | ShortType | IntegerType | LongType | DateType |
+            TimestampType | TimestampNTZType => true
+        case t => t == StringType
+      }) && newDel.forall(e => e.cols == pcols && e.seq == v) &&
+      prevDel.subsetOf(curDel.toSet) && {
+        val seqs = readSeqs(name, v)
+        common.forall(r => seqs.getOrElse(r, 0) < v)
+      }
+    if (!eligible) None
+    else if (common.isEmpty) Some(identity)
+    else {
+      val probe = readEqSidecars(name, newDel, pcols, inv)
+        .limit(TableStore.BloomProbeMaxKeys + 1).collect()
+      if (probe.length > TableStore.BloomProbeMaxKeys) None
+      else {
+        val ks = probe.flatMap(r => Option(r.get(0))).distinct.toSeq
+        Some(_.filter(col(s"`${key.get}`").isInCollection(ks)))
+      }
     }
   }
 
@@ -3730,7 +3817,7 @@ final class TableStore(private[tables] val spark: SparkSession,
     val parquetFiles = listStatusRec(out)
       .count(_.getPath.getName.endsWith(".parquet"))
     if (parquetFiles < 2) return rel // one slice: nothing to ever skip
-    val back = spark.read.parquet(out.toString)
+    val back = spark.read.schema(keys.schema).parquet(out.toString)
     val statCols: Seq[(String, org.apache.spark.sql.Column)] =
       pCols.map(c => c -> col(s"`$c`")) ++
         derivedDims.map(f => f.render -> derivedCol(back, f))
@@ -3797,19 +3884,56 @@ final class TableStore(private[tables] val spark: SparkSession,
 
   private def readDeleteEntries(name: String, version: Int): Seq[DeleteEntry] = {
     val p = new HPath(tdir(name), f"manifest-$version%06d.deletes")
-    if (!fs.exists(p)) Nil
-    else readLines(p).flatMap { line =>
+    if (!fs.exists(p)) return Nil
+    val lines = readLines(p)
+    val es = lines.flatMap { line =>
       line.split('\t') match {
         case Array(rel, cols, seq) => seq.toIntOption.map(s =>
           DeleteEntry(rel, cols.split(',').toSeq.filter(_.nonEmpty), s))
         case _ => None // corrupt line: fail loudly below, not silently
       }
-    } match {
-      case es if es.size == readLines(p).count(_.nonEmpty) => es
-      case _ => sys.error(s"corrupt delete sidecar for $name@$version — " +
-        "refusing a read that could resurrect deleted rows")
     }
+    if (es.size != lines.size)
+      sys.error(s"corrupt delete sidecar for $name@$version — " +
+        "refusing a read that could resurrect deleted rows")
+    es
   }
+
+  /** Equality-delete sidecars `es`, all keyed on physical columns
+    * `pcols`, as one frame of those columns under their CURRENT declared
+    * types. The schema is known, so no schema-inference job runs per
+    * sidecar, and a sidecar written before a [[widenColumn]] reads
+    * widened. `inv` is [[invPhysMap]]. */
+  private def readEqSidecars(name: String, es: Seq[DeleteEntry],
+      pcols: Seq[String], inv: Map[String, String]): DataFrame = {
+    val sch = schema(name)
+    spark.read.schema(StructType(pcols.map(p =>
+        StructField(p, sch(inv(p)).dataType))))
+      .parquet(es.map(e => new HPath(deletesDir(name), e.rel).toString): _*)
+  }
+
+  /** The distinct key tuples of equality deletes `es` (see
+    * [[readEqSidecars]]), named by their live logical columns. */
+  private def eqDeleteKeys(name: String, es: Seq[DeleteEntry],
+      pcols: Seq[String], inv: Map[String, String]): DataFrame =
+    readEqSidecars(name, es, pcols, inv)
+      .select(pcols.map(p => col(s"`$p`").as(inv(p))): _*).distinct()
+
+  /** A deletion-vector sidecar under its fixed schema (no inference). */
+  private def readDvSidecar(name: String, e: DeleteEntry): DataFrame =
+    spark.read.schema(DeletionVectors.dvSchema)
+      .parquet(new HPath(deletesDir(name), e.rel).toString)
+
+  /** Positional entries `posE` as one (file, bitmap) frame: DV sidecars
+    * read as-is, legacy pair sidecars fold into bitmaps on the executors
+    * first. */
+  private def posDvFrame(name: String, posE: Seq[DeleteEntry]): DataFrame =
+    posE.map { e =>
+      if (e.cols == Seq(TableStore.DvMarker)) readDvSidecar(name, e)
+      else DeletionVectors.fromPairsLocal(
+        spark.read.parquet(new HPath(deletesDir(name), e.rel).toString)
+          .toDF(TableStore.PosFileCol, TableStore.PosIdxCol))
+    }.reduce(_ unionByName _)
 
   /** Per-file sequence numbers, tracked only while deletes are pending;
     * a file absent from the sidecar predates the first pending delete. */
@@ -3937,7 +4061,9 @@ final class TableStore(private[tables] val spark: SparkSession,
       version: Int, rowPos: Boolean = false,
       rowIds: Boolean = false): DataFrame = {
     val entries = readDeleteEntries(name, version)
-    if (entries.isEmpty)
+    // no deletes, or no files: the plain indexed read (an empty `rels`
+    // is the empty frame — there are no mask classes to union)
+    if (entries.isEmpty || rels.isEmpty)
       return indexedRead(name, rels, version, rowPos, rowIds)
     // position deletes mask by (file, row ordinal) — inherently
     // file-scoped, so the sequence-class machinery below only governs
@@ -3959,13 +4085,8 @@ final class TableStore(private[tables] val spark: SparkSession,
         val applicable = delSeqs.takeRight(c).toSet
         eqE.filter(e => applicable.contains(e.seq))
           .groupBy(_.cols).foldLeft(base) { case (acc, (pcols, es)) =>
-            val keys = es.map(e => spark.read.parquet(
-                new HPath(deletesDir(name), e.rel).toString))
-              .reduce(_ unionByName _).distinct()
-            val logical = pcols.map(inv)
-            val keyDf = keys.select(pcols.zip(logical).map {
-              case (p, l) => col(s"`$p`").as(l) }: _*)
-            acc.join(keyDf, logical, "left_anti")
+            acc.join(eqDeleteKeys(name, es, pcols, inv), pcols.map(inv),
+              "left_anti")
           }
       }
     }.reduce(_ unionByName _)
@@ -3980,14 +4101,7 @@ final class TableStore(private[tables] val spark: SparkSession,
         // scan's partitioning survives. Oversized masks fall back to
         // exploding into a distributed pair anti-join — correct at any
         // size, just not exchange-free.
-        val dvDf = posE.map { e =>
-          val raw = spark.read.parquet(
-            new HPath(deletesDir(name), e.rel).toString)
-          if (e.cols == Seq(TableStore.DvMarker)) raw
-            .select(col(TableStore.PosFileCol), col(DeletionVectors.DvCol))
-          else DeletionVectors.fromPairsLocal(
-            raw.toDF(TableStore.PosFileCol, TableStore.PosIdxCol))
-        }.reduce(_ unionByName _)
+        val dvDf = posDvFrame(name, posE)
         val sidecarBytes = posE.map(e =>
           listStatusRec(new HPath(deletesDir(name), e.rel))
             .filter(_.getPath.getName.endsWith(".parquet"))
@@ -4181,17 +4295,8 @@ final class TableStore(private[tables] val spark: SparkSession,
           val applicable = delSeqs.takeRight(c).toSet
           eqE.filter(e => applicable.contains(e.seq))
             .groupBy(_.cols).flatMap { case (pcols, es) =>
-              val keys = es.map(e => spark.read.parquet(
-                  new HPath(deletesDir(name), e.rel).toString))
-                .reduce(_ unionByName _).distinct()
-              val logical = pcols.map(inv)
-              val keyDf = keys.select(pcols.zip(logical).map {
-                case (p, l) => col(s"`$p`").as(l) }: _*)
-              pruneByBlooms(name,
-                pruneByBucketDirs(name,
-                  pruneByZones(name, rs, keyBounds(name, keyDf, logical), base),
-                  keyDf, logical),
-                keyDf, logical, base)
+              pruneByKeys(name, rs, eqDeleteKeys(name, es, pcols, inv),
+                pcols.map(inv), base)
             }
         }
       }.toSet
@@ -4203,8 +4308,10 @@ final class TableStore(private[tables] val spark: SparkSession,
         // project the file column BEFORE the union: pair and DV sidecars
         // share only that column (and it is all this listing needs —
         // column pruning skips the bitmap/ordinal bytes entirely)
-        val named = posE.map(e => spark.read.parquet(
-            new HPath(deletesDir(name), e.rel).toString)
+        val named = posE.map(e =>
+            (if (e.cols == Seq(TableStore.DvMarker)) readDvSidecar(name, e)
+             else spark.read.parquet(
+               new HPath(deletesDir(name), e.rel).toString))
             .select(col(col0Name(posE)).as("f")))
           .reduce(_ unionByName _).distinct()
           .collect().map(_.getString(0)).toSet
@@ -4303,9 +4410,6 @@ final class TableStore(private[tables] val spark: SparkSession,
     val (posE, eqE) = entries.partition(e => TableStore.isPosEntry(e.cols))
     val fileSeqs = readSeqs(name, base).values.toSet
     val inv = invPhysMap(name)
-    val sch = schema(name)
-    def readSidecar(e: DeleteEntry): DataFrame =
-      spark.read.parquet(new HPath(deletesDir(name), e.rel).toString)
     def writeSidecar(df: DataFrame, prefix: String): String = {
       val rel = s"$prefix-${java.util.UUID.randomUUID()}"
       df.write.parquet(new HPath(deletesDir(name), rel).toString)
@@ -4319,14 +4423,8 @@ final class TableStore(private[tables] val spark: SparkSession,
           (posE.size == 1 && posE.head.cols == Seq(TableStore.DvMarker)))
         posE
       else {
-        val dvDf = posE.map { e =>
-          val raw = readSidecar(e)
-          if (e.cols == Seq(TableStore.DvMarker)) raw
-            .select(col(TableStore.PosFileCol), col(DeletionVectors.DvCol))
-          else DeletionVectors.fromPairsLocal(
-            raw.toDF(TableStore.PosFileCol, TableStore.PosIdxCol))
-        }.reduce(_ unionByName _)
-        Seq(DeleteEntry(writeSidecar(DeletionVectors.mergeDvs(dvDf), "dv"),
+        Seq(DeleteEntry(writeSidecar(
+            DeletionVectors.mergeDvs(posDvFrame(name, posE)), "dv"),
           Seq(TableStore.DvMarker), posE.map(_.seq).max))
       }
     val newEq = eqE.groupBy(_.cols).toSeq.sortBy(_._1.mkString(","))
@@ -4334,7 +4432,7 @@ final class TableStore(private[tables] val spark: SparkSession,
         val es = es0.sortBy(_.seq)
         // maximal runs with no live file sequence between consecutive
         // entry sequences (sidecars may predate a later type widening —
-        // align every key column to its CURRENT declared type)
+        // readEqSidecars reads every key column under its CURRENT type)
         val runs = es.foldLeft(Vector.empty[Vector[DeleteEntry]]) { (acc, e) =>
           acc.lastOption match {
             case Some(run)
@@ -4346,10 +4444,7 @@ final class TableStore(private[tables] val spark: SparkSession,
         runs.map { run =>
           if (run.size == 1) run.head
           else {
-            val merged = run.map(e => readSidecar(e).select(cols.map { pc =>
-              col(s"`$pc`")
-                .cast(sch(sch.fieldIndex(inv(pc))).dataType).as(pc)
-            }: _*)).reduce(_ unionByName _).distinct()
+            val merged = readEqSidecars(name, run, cols, inv).distinct()
             // merged sidecars re-sort and re-range: compaction is also
             // the upgrade point for pre-range sidecars
             DeleteEntry(writeEqSidecar(name, merged, cols), cols,
@@ -4412,11 +4507,7 @@ final class TableStore(private[tables] val spark: SparkSession,
       // discard survivors that provably hold NONE of the batch's keys
       // (any layout — the random-key CDC case zone maps can't touch).
       // Manifest + sidecar reads only, no data file opened.
-      val candidates = pruneByBlooms(name,
-        pruneByBucketDirs(name,
-          pruneByZones(name, rels, keyBounds(name, distinctKeys, keyCols), base),
-          distinctKeys, keyCols),
-        distinctKeys, keyCols, base)
+      val candidates = pruneByKeys(name, rels, distinctKeys, keyCols, base)
       if (candidates.nonEmpty) {
         val candidatePaths = candidates.map(r => new HPath(dataDir(name), r).toString)
         // Stage 2 — exact pruning: a semi join over the candidates marks
@@ -4464,15 +4555,23 @@ final class TableStore(private[tables] val spark: SparkSession,
     * tests and for callers that want to observe skipping behavior. */
   def candidateFilesForKeys(name: String, keys: DataFrame,
       keyCols: Seq[String]): Seq[String] = {
-    val version = currentVersion(name)
-    val distinctKeys = keys.select(keyCols.map(col): _*).distinct()
+    pruneByKeys(name, currentRelPaths(name),
+      keys.select(keyCols.map(col): _*).distinct(), keyCols,
+      currentVersion(name))
+  }
+
+  /** Files among `rels` that may hold a tuple of `distinctKeys` (over
+    * logical `keyCols`): zone, then bucket-directory, then bloom
+    * pruning against `version`'s metadata, each failing open. */
+  private def pruneByKeys(name: String, rels: Seq[String],
+      distinctKeys: DataFrame, keyCols: Seq[String],
+      version: Int): Seq[String] =
     pruneByBlooms(name,
       pruneByBucketDirs(name,
-        pruneByZones(name, currentRelPaths(name),
-          keyBounds(name, distinctKeys, keyCols), version),
+        pruneByZones(name, rels, keyBounds(name, distinctKeys, keyCols),
+          version),
         distinctKeys, keyCols),
       distinctKeys, keyCols, version)
-  }
 
   // ---- metadata-only aggregates -------------------------------------------
 

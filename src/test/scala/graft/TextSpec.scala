@@ -175,6 +175,17 @@ class TextSpec extends SparkSpec {
     assert(w.head.getLong(1) === 3L)
   }
 
+  test("removeBoilerplate minDocs = 1: a line seen only under null doc " +
+      "ids has df 0 and is kept") {
+    val docs = Seq((Some(1L), "alpha\nbeta"), (None, "gamma\ndelta"))
+      .toDF("doc_id", "text")
+    val out = Text.removeBoilerplate(docs, minDocs = 1).collect()
+      .map(r => (Option(r.get(0)), r.getLong(1), r.getString(2))).toSeq
+    // every line of doc 1 occurs in one distinct doc (≥ 1: boilerplate);
+    // the null-id lines occur in none
+    assert(out === Seq((None, 2L, "gamma\ndelta")))
+  }
+
   test("gopherFlags: each rule fires on its planted violation and only there") {
     val good = (Seq.fill(8)("the quick brown fox jumps over that lazy dog " +
       "with some more words here and there to reach fifty of them total")
