@@ -29,7 +29,7 @@ object Bench {
       // without crc sidecars (graft.fs.FastLocalFs) — remote schemes
       // (HDFS/S3A, the 100 TB deployment) never resolve these keys
       .config("spark.hadoop.fs.file.impl",
-        classOf[graft.fs.FastRawLocalFileSystem].getName)
+        classOf[graft.fs.FastLocalFileSystem].getName)
       .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
         classOf[graft.fs.FastLocalFs].getName)
       .getOrCreate()

@@ -30,7 +30,7 @@ object Profile {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .config("spark.hadoop.fs.file.impl",
-        classOf[graft.fs.FastRawLocalFileSystem].getName)
+        classOf[graft.fs.FastLocalFileSystem].getName)
       .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
         classOf[graft.fs.FastLocalFs].getName)
     if (args.contains("streamprog"))

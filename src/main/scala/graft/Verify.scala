@@ -22,7 +22,7 @@ object Verify {
       // same local-FS fast path as Bench: results are byte-identical,
       // only the fork/exec-per-file overhead goes away
       .config("spark.hadoop.fs.file.impl",
-        classOf[graft.fs.FastRawLocalFileSystem].getName)
+        classOf[graft.fs.FastLocalFileSystem].getName)
       .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
         classOf[graft.fs.FastLocalFs].getName)
       .getOrCreate()

@@ -5,21 +5,32 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types._
+import org.apache.spark.sql.graftshim.Bridge
 import graft.tables.TableStore
 
 /** Batch CDC application onto a managed table.
   *
   * Replaces the reference's one-Spark-job-per-record loop
   * (SparkDestinationStream.java:71-85 — its #1 performance anti-pattern,
-  * SURVEY.md §6) with a single distributed pass:
+  * SURVEY.md §6) with a fixed handful of jobs per batch, whatever its size:
   *
   *   1. decode all payloads at once (`from_json`, FAILFAST — reference S3,
   *      SparkDestinationStream.java:221-227);
   *   2. reduce to the NET effect per key (last write wins, window over the
-  *      record sequence);
-  *   3. one atomic `TableStore.applyNet` commit — the atomic replacement for
-  *      the reference's non-atomic delete-then-insert update
-  *      (SparkDestinationStream.java:110-114; README.md:74-77).
+  *      record sequence), computed ONCE and persisted: the window's shuffle
+  *      is one job, and one more job materializes the batch while it
+  *      validates it and counts the net ops;
+  *   3. one atomic `TableStore.applyNet` commit from the persisted batch —
+  *      the atomic replacement for the reference's non-atomic
+  *      delete-then-insert update (SparkDestinationStream.java:110-114;
+  *      README.md:74-77). Merge-on-read: the delete sidecar and the upsert
+  *      write, one job each. Copy-on-write: the key bounds, the
+  *      affected-file semi join (broadcast + scan), the survivors' rewrite
+  *      (broadcast + write) and the upsert write, six jobs.
+  *
+  * So a batch is 4 Spark jobs on a merge-on-read table and 8 on a
+  * copy-on-write one (`CdcJobsSpec`); the written files' stats come from
+  * the write jobs themselves.
   *
   * No SQL strings are built anywhere: key predicates are Column equality
   * joins, injection-safe by construction (vs the reference's jOOQ-inlined
@@ -200,34 +211,35 @@ object CdcApply {
       .withColumn("__parsed", parsed)
       .withColumn("__corrupt", col("__parsed").getField("__corrupt"))
       .withColumn("__row", rowCol)
-      .cache()
+    // backtick-quoted so a metadata-shaped name like `opencdc.createdAt`
+    // resolves as one literal column, not nested-field access
+    val ordCol = config.orderCol.map { oc =>
+      require(env.columns.contains(oc),
+        s"config.orderCol '$oc' is not a column of the envelope frame " +
+          s"(columns: ${env.columns.mkString(", ")})")
+      col(s"`$oc`").as("__ord")
+    }
+    val keyFields = config.keyCols.map(c => col("__k").getField(c).as(c))
+    // Net effect per key: highest source-time order value wins when
+    // configured (desc = nulls last, so a record missing the value loses
+    // to any record carrying one), arrival order breaks ties; without
+    // orderCol, last record by ingest order wins. The batch is ranked
+    // ONCE and persisted: validation, the op counts and the whole commit
+    // (key bounds, affected-file join, sidecar, upsert write) read it.
+    val ordering =
+      if (ordCol.isDefined) Seq(col("__ord").desc, col("__seq").desc)
+      else Seq(col("__seq").desc)
+    val w = Window.partitionBy(config.keyCols.map(col): _*)
+      .orderBy(ordering: _*)
+    val (ranked, rankedRows) = Bridge.persisted(decoded
+      .select((keyFields :+ col("__seq") :+ col("__op") :+ col("__row")
+        :+ col("__corrupt")) ++ ordCol.toSeq: _*)
+      .withColumn("__rn", row_number().over(w)))
     try {
-      // backtick-quoted so a metadata-shaped name like `opencdc.createdAt`
-      // resolves as one literal column, not nested-field access
-      val ordCol = config.orderCol.map { oc =>
-        require(env.columns.contains(oc),
-          s"config.orderCol '$oc' is not a column of the envelope frame " +
-            s"(columns: ${env.columns.mkString(", ")})")
-        col(s"`$oc`").as("__ord")
-      }
-      val keyFields = config.keyCols.map(c => col("__k").getField(c).as(c))
-      val flat = decoded
-        .select((keyFields :+ col("__seq") :+ col("__op") :+ col("__row")
-          :+ col("__corrupt")) ++ ordCol.toSeq: _*)
-      // Net effect per key: highest source-time order value wins when
-      // configured (desc = nulls last, so a record missing the value loses
-      // to any record carrying one), arrival order breaks ties; without
-      // orderCol, last record by ingest order wins.
-      val ordering =
-        if (ordCol.isDefined) Seq(col("__ord").desc, col("__seq").desc)
-        else Seq(col("__seq").desc)
-      val w = Window.partitionBy(config.keyCols.map(col): _*)
-        .orderBy(ordering: _*)
-      val net = flat
-        .withColumn("__rn", row_number().over(w))
-        .filter(col("__rn") === 1)
+      val net = ranked.filter(col("__rn") === 1)
 
-      // Distributed per-record validation, one aggregate job:
+      // Distributed per-record validation and the net op counts, in one
+      // pass over the ranked batch:
       //  - unknown/null op would otherwise silently act as a delete;
       //  - a non-delete with no payload would upsert an all-null ghost row;
       //  - an envelope key disagreeing with the payload's own key columns
@@ -235,46 +247,51 @@ object CdcApply {
       //  - a key missing a key column (F6 guard).
       // Scope: ALL records under strict validation (the reference rejects
       // per record), net winners only under net-only.
-      val toValidate = if (config.strictValidation) flat else net
+      val isNet = col("__rn") === 1
+      val scope = if (config.strictValidation) lit(true) else isNet
       val upsertOps = Seq("create", "update", "snapshot")
       val anyKeyNull = config.keyCols
         .map(c => col(c).isNull).reduce(_ || _)
       val keyMismatch = config.keyCols
         .map(c => !(col("__row").getField(c) <=> col(c)))
         .reduce(_ || _)
-      val checks = toValidate.agg(
-        count(lit(1)).as("n"),
-        sum(when(col("__op").isNull ||
-          !col("__op").isin((upsertOps :+ "delete"): _*), 1L).otherwise(0L)).as("bad_op"),
-        sum(when(col("__op").isin(upsertOps: _*) && col("__row").isNull, 1L)
-          .otherwise(0L)).as("no_payload"),
-        sum(when(col("__row").isNotNull && keyMismatch, 1L).otherwise(0L)).as("key_mismatch"),
-        sum(when(anyKeyNull, 1L).otherwise(0L)).as("bad_key"),
-        sum(when(col("__corrupt").isNotNull, 1L).otherwise(0L)).as("malformed"))
-        .collect()(0)
-      if (checks.getLong(0) == 0) return Stats(0, 0) // empty batch
-      if (checks.getLong(5) > 0) throw new IllegalArgumentException(
-        s"${checks.getLong(5)} record(s) with malformed payload JSON")
-      if (checks.getLong(1) > 0) throw new IllegalArgumentException(
-        s"${checks.getLong(1)} record(s) with unknown operation")
-      if (checks.getLong(2) > 0) throw new IllegalArgumentException(
-        s"${checks.getLong(2)} non-delete record(s) have no after payload")
-      if (checks.getLong(3) > 0) throw new IllegalArgumentException(
-        s"${checks.getLong(3)} record(s) whose payload key columns disagree " +
+      val flags = Seq(
+        lit(true), // records in scope
+        col("__corrupt").isNotNull,
+        col("__op").isNull || !col("__op").isin((upsertOps :+ "delete"): _*),
+        col("__op").isin(upsertOps: _*) && col("__row").isNull,
+        col("__row").isNotNull && keyMismatch,
+        anyKeyNull)
+        .map(f => when(scope && f, 1L).otherwise(0L)) ++ Seq(
+        when(isNet && col("__op") =!= "delete", 1L).otherwise(0L),
+        when(isNet && col("__op") === "delete", 1L).otherwise(0L))
+      // summed per task and then on the driver: one job, no exchange
+      val Array(n, malformed, badOp, noPayload, mismatch, badKey, u, d) =
+        ranked.select(flags: _*).rdd
+          .map(r => Array.tabulate(r.length)(r.getLong))
+          .fold(new Array[Long](flags.length)) { (a, b) =>
+            a.indices.foreach(i => a(i) += b(i)); a
+          }
+      if (n == 0) return Stats(0, 0) // empty batch
+      if (malformed > 0) throw new IllegalArgumentException(
+        s"$malformed record(s) with malformed payload JSON")
+      if (badOp > 0) throw new IllegalArgumentException(
+        s"$badOp record(s) with unknown operation")
+      if (noPayload > 0) throw new IllegalArgumentException(
+        s"$noPayload non-delete record(s) have no after payload")
+      if (mismatch > 0) throw new IllegalArgumentException(
+        s"$mismatch record(s) whose payload key columns disagree " +
           "with the record key")
-      if (checks.getLong(4) > 0) throw new IllegalArgumentException(
+      if (badKey > 0) throw new IllegalArgumentException(
         "key has no fields (a record's key is missing a key column)")
       val upserts = net.filter(col("__op") =!= "delete")
         .select(col("__row.*"))
-      val touchedKeys = net.select(config.keyCols.map(col): _*)
-      val statsRow = net.agg(
-        sum(when(col("__op") =!= "delete", 1L).otherwise(0L)).as("u"),
-        sum(when(col("__op") === "delete", 1L).otherwise(0L)).as("d"))
-        .collect()(0)
-      store.applyNet(config.table, touchedKeys, upserts, config.keyCols,
-        meta = commitTags)
-      Stats(statsRow.getLong(0), statsRow.getLong(1))
-    } finally { decoded.unpersist(); () }
+      // one row per key: the window partitions by the key columns
+      store.applyNet(config.table, net.select(config.keyCols.map(col): _*),
+        upserts, config.keyCols, meta = commitTags,
+        distinctKeyCount = Some(u + d))
+      Stats(u, d)
+    } finally { rankedRows.unpersist(); () }
   }
 
   /** AUTO SCHEMA EVOLUTION (`CdcConfig.autoEvolve`): add table columns

@@ -3,7 +3,7 @@ package graft.fs
 import java.net.URI
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{DelegateToFileSystem, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.{DelegateToFileSystem, LocalFileSystem, Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.permission.FsPermission
 
 /** `file:` scheme without fork/exec syscalls (guide §6: I/O and file
@@ -24,17 +24,12 @@ import org.apache.hadoop.fs.permission.FsPermission
   * information (nothing ever reads them back), so this subclass makes
   * `setPermission` a no-op: creates and mkdirs stop forking, while
   * data bytes, rename/commit atomicity, and directory semantics are
-  * untouched. Registered via `fs.file.impl` (the FileSystem API) and
+  * untouched. Registered, through [[FastLocalFileSystem]], via
+  * `fs.file.impl` (the FileSystem API) and
   * `fs.AbstractFileSystem.file.impl` (the FileContext API, which the
   * streaming checkpoint manager uses). Object-store and HDFS schemes
   * never load this class, so production deployments are unaffected;
-  * the configs are set only by this repo's local-mode entry points.
-  *
-  * Visibility change: without the checksum layer, `listStatus` no
-  * longer hides `.crc` sidecars, so a directory written earlier by a
-  * stock `LocalFileSystem` lists its `.name.crc` files too.
-  * `TableStore`'s recursive `file:` listing skips them; any other
-  * unfiltered listing of such a directory sees them. */
+  * the configs are set only by this repo's local-mode entry points. */
 class FastRawLocalFileSystem extends RawLocalFileSystem {
   // RawLocalFileSystem inherits FileSystem.getScheme's throwing default
   // (only the ChecksumFileSystem wrapper overrides it upstream)
@@ -42,7 +37,17 @@ class FastRawLocalFileSystem extends RawLocalFileSystem {
   override def setPermission(p: Path, permission: FsPermission): Unit = ()
 }
 
-/** FileContext face of [[FastRawLocalFileSystem]] for
+/** The `fs.file.impl` class: a `LocalFileSystem` (so
+  * `FileSystem.getLocal` and every `LocalFileSystem` cast keep working)
+  * over [[FastRawLocalFileSystem]], with checksums neither written nor
+  * verified — no `.crc` sidecar per file. Listings still hide `.crc`
+  * names, as the stock filesystem does. */
+class FastLocalFileSystem extends LocalFileSystem(new FastRawLocalFileSystem) {
+  setVerifyChecksum(false)
+  setWriteChecksum(false)
+}
+
+/** FileContext face of [[FastLocalFileSystem]] for
   * `fs.AbstractFileSystem.file.impl` (structured streaming's
   * checkpoint writes resolve through AbstractFileSystem, not
   * FileSystem). Replacing the default checksum layer also halves the
@@ -50,4 +55,4 @@ class FastRawLocalFileSystem extends RawLocalFileSystem {
   * rename protocol, not on `.crc` sidecars. */
 class FastLocalFs(uri: URI, conf: Configuration)
   extends DelegateToFileSystem(
-    uri, new FastRawLocalFileSystem, conf, "file", false)
+    uri, new FastLocalFileSystem, conf, "file", false)

@@ -320,8 +320,10 @@ object Text {
     val tf = terms.groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
     // document frequency FROM tf: tf's rows are exactly the distinct
     // (doc, term) pairs, so counting them per term equals the
-    // distinct-doc count — drops the second explode + a full
-    // (doc, term) distinct exchange from the plan
+    // distinct-doc count. The physical plan is the same as an explode
+    // + distinct: Spark does not share the tf subtree between the
+    // join's sides, so the df branch re-runs the explode and the
+    // (doc, term) aggregate (5 Generate nodes in plans/r14's dumps)
     val df = tf.groupBy("term").agg(count(lit(1)).as("df"))
     val scored = tf.join(df, "term")
       .select(col("doc_id").as("query_id"),
@@ -932,12 +934,12 @@ object Text {
   }
 
   private def txtBpePairs(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    bpePairCounts(t(spark, dir, "documents"), 32)
-      .withColumn("rank",
-        row_number().over(Window.orderBy(col("n").desc, col("pair"))))
-      .select(col("rank"), col("pair"), col("n"))
-      .orderBy("rank")
+    import spark.implicits._
+    // at most 32 rows, already in rank order: numbered on the driver
+    // rather than by a window over one partition
+    bpePairCounts(t(spark, dir, "documents"), 32).collect().toSeq
+      .zipWithIndex.map { case (r, i) => (i + 1, r.getString(0), r.getLong(1)) }
+      .toDF("rank", "pair", "n")
   }
 
   private val txtBpePairsSql =
@@ -1030,16 +1032,18 @@ object Text {
     * segmentation per distinct word — encoding cost is one join on
     * `word`, never a per-document scan of the merge list). Symbol ids
     * are the dense alphabetical rank over the final symbol set (a few
-    * hundred rows — chars + k merges — so the rank window is trivially
-    * small). Output per doc: symbol count, id-sum evidence, and md5 of
-    * the full encoded sequence. */
+    * hundred rows — chars + k merges — so it is ranked on the driver).
+    * Output per doc: symbol count, id-sum evidence, and md5 of the full
+    * encoded sequence. */
   def bpeEncode(docs: DataFrame, k: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
+    val spark = docs.sparkSession
+    import spark.implicits._
     val (_, vocab) = bpeTrain(docs, k)
     val syms = vocab.select(col("word"), split(trim(col("seq")), " ").as("syms"))
     val idTable = syms.select(explode(col("syms")).as("sym")).distinct()
-      .withColumn("sym_id",
-        row_number().over(Window.orderBy("sym")).cast(LongType))
+      .orderBy("sym").collect().toSeq
+      .zipWithIndex.map { case (r, i) => (r.getString(0), i + 1L) }
+      .toDF("sym", "sym_id")
     val tokPos = docs.filter(col("text").isNotNull)
       .select(col("doc_id"),
         posexplode(tokens(lower(col("text")))).as(Seq("pos", "word")))

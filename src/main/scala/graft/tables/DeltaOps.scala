@@ -161,7 +161,7 @@ private[tables] final class GraftDeltaBatchWrite(store: TableStore,
       coordSchema.json, dataOrds.toArray, layout.partPhysNames.toArray,
       partOrds.toArray, layout.partSpecs.toArray,
       store.sparkSession.sessionState.conf.sessionLocalTimeZone,
-      idWriter,
+      store.fileStatsSpec(tbl, layout.dataPhysSchema), idWriter,
       shredSpecs = store.variantShreds(tbl).map { case (src, path, as, dt) =>
         s"$src\t$path\t$as\t${dt.json}" }.toArray)
   }
@@ -169,11 +169,11 @@ private[tables] final class GraftDeltaBatchWrite(store: TableStore,
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     val data = messages.flatMap {
       case m: GraftDeltaCommit => m.dataRels ++ m.idDataRels
-      case _ => Array.empty[String]
-    }.toSet
+      case _ => Nil
+    }.toMap
     val idData = messages.flatMap {
-      case m: GraftDeltaCommit => m.idDataRels
-      case _ => Array.empty[String]
+      case m: GraftDeltaCommit => m.idDataRels.keys
+      case _ => Nil
     }.toSet
     val dels = messages.flatMap {
       case m: GraftDeltaCommit => m.deleteRels
@@ -187,9 +187,10 @@ private[tables] final class GraftDeltaBatchWrite(store: TableStore,
   }
 }
 
-private[tables] final case class GraftDeltaCommit(dataRels: Array[String],
-  deleteRels: Array[String],
-  idDataRels: Array[String] = Array.empty) extends WriterCommitMessage
+private[tables] final case class GraftDeltaCommit(
+  dataRels: Map[String, FileStatsPartial], deleteRels: Array[String],
+  idDataRels: Map[String, FileStatsPartial] = Map.empty)
+  extends WriterCommitMessage
 
 /** Driver-prepared pieces of the id-carrying writer (row lineage):
   * output factory over the dataSchema + `_row_id` column, and ordinals
@@ -208,7 +209,7 @@ private[tables] final class GraftDeltaWriterFactory(
     stagingDir: String, rowSchemaJson: String, dataSchemaJson: String,
     coordSchemaJson: String, dataOrdinals: Array[Int],
     partPhysNames: Array[String], partOrdinals: Array[Int],
-    partSpecs: Array[String], timeZone: String,
+    partSpecs: Array[String], timeZone: String, stats: FileStatsSpec,
     idWriter: Option[GraftDeltaIdWriterSpec] = None,
     shredSpecs: Array[String] = Array.empty)
   extends DeltaWriterFactory {
@@ -220,13 +221,13 @@ private[tables] final class GraftDeltaWriterFactory(
         DataType.fromJson(rowSchemaJson).asInstanceOf[StructType],
         DataType.fromJson(dataSchemaJson).asInstanceOf[StructType],
         dataOrdinals, partPhysNames, partOrdinals, partSpecs, timeZone,
-        partitionId, taskId, shredSpecs = shredSpecs),
+        stats, partitionId, taskId, shredSpecs = shredSpecs),
       idWriter.map(s =>
         new GraftCowDataWriter(s.owf, s.conf.value, stagingDir,
           DataType.fromJson(s.rowSchemaJson).asInstanceOf[StructType],
           DataType.fromJson(s.dataSchemaJson).asInstanceOf[StructType],
           s.dataOrdinals, partPhysNames, partOrdinals, partSpecs, timeZone,
-          partitionId, taskId, tag = "-rid", shredSpecs = shredSpecs)),
+          stats, partitionId, taskId, tag = "-rid", shredSpecs = shredSpecs)),
       owfCoord, coordConf.value, stagingDir,
       DataType.fromJson(coordSchemaJson).asInstanceOf[StructType],
       partitionId, taskId)
@@ -309,14 +310,8 @@ private[tables] final class GraftDeltaDataWriter(
   }
 
   override def commit(): WriterCommitMessage = {
-    val dataMsg = inserts.commit() match {
-      case GraftCowCommit(rels, _) => rels
-      case _ => Array.empty[String]
-    }
-    val idMsg = idInserts.map(_.commit() match {
-      case GraftCowCommit(rels, _) => rels
-      case _ => Array.empty[String]
-    }).getOrElse(Array.empty[String])
+    val dataMsg = inserts.commitStats()
+    val idMsg = idInserts.map(_.commitStats()).getOrElse(Map.empty)
     flushDvs()
     GraftDeltaCommit(dataMsg, if (coordRel == null) Array.empty
       else Array(coordRel), idMsg)

@@ -1302,7 +1302,7 @@ private[tables] final class GraftDynamicOverwriteWrite(store: TableStore,
   override def toBatch: org.apache.spark.sql.connector.write.BatchWrite =
     new GraftStagedBatchWrite(store, tbl, writeSchema) {
       override protected def commitStaged(staging: HPath,
-          kept: Set[String], idKept: Set[String]): Unit =
+          kept: Map[String, FileStatsPartial], idKept: Set[String]): Unit =
         this.store.commitDynamicStaged(tbl, staging, kept)
     }
 

@@ -338,7 +338,7 @@ private[tables] final class GraftCowBatchWrite(op: GraftRowLevelOperation,
     if (op.lineage) Some(1) else None
 
   override protected def commitStaged(staging: HPath,
-      kept: Set[String], idKept: Set[String]): Unit = {
+      kept: Map[String, FileStatsPartial], idKept: Set[String]): Unit = {
     val (base, cands) = op.planned.getOrElse((store.currentVersion(op.tbl), Nil))
     store.commitRewriteStaged(op.tbl, base, cands.toSet, staging, kept, idKept)
   }
@@ -355,8 +355,8 @@ private[tables] abstract class GraftStagedBatchWrite(
   private val staging = new HPath(store.tableDir(tbl),
     s"_staging-rl-${UUID.randomUUID().toString.take(8)}")
 
-  protected def commitStaged(staging: HPath, kept: Set[String],
-      idKept: Set[String]): Unit
+  protected def commitStaged(staging: HPath,
+      kept: Map[String, FileStatsPartial], idKept: Set[String]): Unit
 
   /** Row-lineage hook: Some(ordinal of `_row_id` in the metadata row)
     * when carried rows must route to an id-materializing writer —
@@ -411,21 +411,22 @@ private[tables] abstract class GraftStagedBatchWrite(
       staging.toString, writeSchema.json, layout.dataPhysSchema.json,
       dataOrds.toArray, layout.partPhysNames.toArray,
       partOrds.toArray, layout.partSpecs.toArray,
-      store.sparkSession.sessionState.conf.sessionLocalTimeZone, idSpec,
+      store.sparkSession.sessionState.conf.sessionLocalTimeZone,
+      store.fileStatsSpec(tbl, layout.dataPhysSchema), idSpec,
       shredSpecs = store.variantShreds(tbl).map { case (src, path, as, dt) =>
         s"$src\t$path\t$as\t${dt.json}" }.toArray)
   }
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    // kept = what tasks actually committed; a speculative duplicate's
-    // files sit in staging but are not adopted
+    // kept = what tasks actually committed, with their files' stats; a
+    // speculative duplicate's files sit in staging but are not adopted
     val kept = messages.flatMap {
-      case m: GraftCowCommit => m.stagedRels ++ m.idStagedRels
-      case _ => Array.empty[String]
-    }.toSet
+      case m: GraftCowCommit => m.staged ++ m.idStaged
+      case _ => Nil
+    }.toMap
     val idKept = messages.flatMap {
-      case m: GraftCowCommit => m.idStagedRels
-      case _ => Array.empty[String]
+      case m: GraftCowCommit => m.idStaged.keys
+      case _ => Nil
     }.toSet
     commitStaged(staging, kept, idKept)
   }
@@ -435,14 +436,17 @@ private[tables] abstract class GraftStagedBatchWrite(
   }
 }
 
-private[tables] final case class GraftCowCommit(stagedRels: Array[String],
-  idStagedRels: Array[String] = Array.empty) extends WriterCommitMessage
+/** A task's staged files (staging-relative) with their stats; `idStaged`
+  * holds the row-lineage writer's id-carrying files. */
+private[tables] final case class GraftCowCommit(
+  staged: Map[String, FileStatsPartial],
+  idStaged: Map[String, FileStatsPartial] = Map.empty) extends WriterCommitMessage
 
 private[tables] final class GraftCowWriterFactory(owf: OutputWriterFactory,
     conf: SerializableHadoopConf, stagingDir: String, rowSchemaJson: String,
     dataSchemaJson: String, dataOrdinals: Array[Int],
     partPhysNames: Array[String], partOrdinals: Array[Int],
-    partSpecs: Array[String], timeZone: String,
+    partSpecs: Array[String], timeZone: String, stats: FileStatsSpec,
     idSpec: Option[(GraftDeltaIdWriterSpec, Int)] = None,
     shredSpecs: Array[String] = Array.empty)
   extends DataWriterFactory {
@@ -451,7 +455,7 @@ private[tables] final class GraftCowWriterFactory(owf: OutputWriterFactory,
     val fresh = new GraftCowDataWriter(owf, conf.value, stagingDir,
       DataType.fromJson(rowSchemaJson).asInstanceOf[StructType],
       DataType.fromJson(dataSchemaJson).asInstanceOf[StructType],
-      dataOrdinals, partPhysNames, partOrdinals, partSpecs, timeZone,
+      dataOrdinals, partPhysNames, partOrdinals, partSpecs, timeZone, stats,
       partitionId, taskId, shredSpecs = shredSpecs)
     idSpec match {
       case None => fresh
@@ -460,7 +464,7 @@ private[tables] final class GraftCowWriterFactory(owf: OutputWriterFactory,
           DataType.fromJson(s.rowSchemaJson).asInstanceOf[StructType],
           DataType.fromJson(s.dataSchemaJson).asInstanceOf[StructType],
           s.dataOrdinals, partPhysNames, partOrdinals, partSpecs, timeZone,
-          partitionId, taskId, tag = "-rid", shredSpecs = shredSpecs)
+          stats, partitionId, taskId, tag = "-rid", shredSpecs = shredSpecs)
         new GraftCowLineageRouter(fresh, idW, metaIdOrd)
     }
   }
@@ -483,17 +487,8 @@ private[tables] final class GraftCowLineageRouter(
 
   override def write(row: InternalRow): Unit = fresh.write(row)
 
-  override def commit(): WriterCommitMessage = {
-    val f = fresh.commit() match {
-      case GraftCowCommit(rels, _) => rels
-      case _ => Array.empty[String]
-    }
-    val i = idW.commit() match {
-      case GraftCowCommit(rels, _) => rels
-      case _ => Array.empty[String]
-    }
-    GraftCowCommit(f, i)
-  }
+  override def commit(): WriterCommitMessage =
+    GraftCowCommit(fresh.commitStats(), idW.commitStats())
 
   override def abort(): Unit = { fresh.abort(); idW.abort() }
   override def close(): Unit = { fresh.close(); idW.close() }
@@ -508,7 +503,7 @@ private[tables] final class GraftCowDataWriter(owf: OutputWriterFactory,
     conf: Configuration, stagingDir: String, rowSchema: StructType,
     dataSchema: StructType, dataOrdinals: Array[Int],
     partPhysNames: Array[String], partOrdinals: Array[Int],
-    partSpecs: Array[String], timeZone: String,
+    partSpecs: Array[String], timeZone: String, stats: FileStatsSpec,
     partitionId: Int, taskId: Long,
     // distinguishes files when one task runs TWO writers (the delta
     // path's id-carrying vs fresh split under row lineage)
@@ -561,9 +556,10 @@ private[tables] final class GraftCowDataWriter(owf: OutputWriterFactory,
         Cast(derived, StringType, Some(timeZone))
           : org.apache.spark.sql.catalyst.expressions.Expression
       }))
-  private val writers =
-    mutable.LinkedHashMap[String, org.apache.spark.sql.execution.datasources.OutputWriter]()
-  private val staged = mutable.ArrayBuffer[String]()
+  // per partition dir: the open file's staged rel, writer and stats
+  private val writers = mutable.LinkedHashMap[String, (String,
+    org.apache.spark.sql.execution.datasources.OutputWriter, FileStatsAcc)]()
+  private val staged = mutable.LinkedHashMap[String, FileStatsPartial]()
 
   /** Carried/updated rows arrive with their `_file` metadata row; the
     * replacement write doesn't route by origin file — group membership
@@ -590,29 +586,36 @@ private[tables] final class GraftCowDataWriter(owf: OutputWriterFactory,
         }
         segs.mkString("/")
     }
-    val w = writers.getOrElseUpdate(dir, {
+    val (_, w, acc) = writers.getOrElseUpdate(dir, {
       val fn = f"part$tag-$partitionId%05d-$taskId-${writers.size}%03d$ext"
       val rel = if (dir.isEmpty) fn else s"$dir/$fn"
-      staged += rel
-      owf.newInstance(s"$stagingDir/$rel", dataSchema, tac)
+      (rel, owf.newInstance(s"$stagingDir/$rel", dataSchema, tac),
+        stats.newAcc())
     })
-    w.write(dataProj(row))
+    val out = dataProj(row)
+    w.write(out)
+    acc.update(out)
   }
 
-  override def commit(): WriterCommitMessage = {
-    writers.values.foreach(_.close())
+  /** Close every file; its staged rel → its stats. */
+  def commitStats(): Map[String, FileStatsPartial] = {
+    writers.values.foreach { case (rel, w, acc) =>
+      w.close()
+      staged(rel) = acc.partial
+    }
     writers.clear()
-    GraftCowCommit(staged.toArray)
+    staged.toMap
   }
 
-  override def abort(): Unit = {
-    // files stay in staging; the driver's staging cleanup removes them
-    writers.values.foreach(w => try w.close() catch { case _: Exception => () })
-    writers.clear()
-  }
+  override def commit(): WriterCommitMessage = GraftCowCommit(commitStats())
+
+  override def abort(): Unit = close()
 
   override def close(): Unit = {
-    writers.values.foreach(w => try w.close() catch { case _: Exception => () })
+    // files stay in staging; the driver's staging cleanup removes them
+    writers.values.foreach { case (_, w, _) =>
+      try w.close() catch { case _: Exception => () }
+    }
     writers.clear()
   }
 }

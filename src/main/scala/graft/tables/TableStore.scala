@@ -2069,10 +2069,7 @@ final class TableStore(private[tables] val spark: SparkSession,
       q.add(dir)
       while (!q.isEmpty) {
         fs.listStatus(q.poll()).foreach { st =>
-          if (st.isDirectory) q.add(st.getPath)
-          // checksum sidecars a stock LocalFileSystem run left behind:
-          // FastRawLocalFileSystem's listing no longer hides them
-          else if (!st.getPath.getName.endsWith(".crc")) buf += st
+          if (st.isDirectory) q.add(st.getPath) else buf += st
         }
       }
     } else {
@@ -2606,7 +2603,7 @@ final class TableStore(private[tables] val spark: SparkSession,
       } catch { case scala.util.control.NonFatal(_) => Map.empty })
     val missing = rels.filter(r => !zc.forall(c => fileHll(r).contains(c)))
     if (missing.nonEmpty) {
-      writeZoneStats(name, missing)
+      scanFileStats(name, missing)
       missing.foreach(cache.remove)
     }
     val unions = zc.flatMap { c =>
@@ -3424,7 +3421,7 @@ final class TableStore(private[tables] val spark: SparkSession,
         "adopted file basenames must be unique within each partition " +
           "directory")
     }
-    writeZoneStats(name, files)
+    scanFileStats(name, files)
     // record the adoption on any sibling SOURCE table BEFORE the commit
     // publishes: the reachability guards' marker fast path must never
     // miss an in-flight adoption
@@ -3675,9 +3672,9 @@ final class TableStore(private[tables] val spark: SparkSession,
     * distributed writer's staged files (`kept` = what the tasks actually
     * committed) and swap exactly their partition directories. */
   private[tables] def commitDynamicStaged(name: String, staging: HPath,
-      kept: Set[String]): Unit = {
+      kept: Map[String, FileStatsPartial]): Unit = {
     val (base, rels) = dynamicOverwriteBase(name)
-    val fresh = promoteStaged(name, staging, Some(kept))
+    val fresh = promoteStaged(name, staging, kept)
     fs.delete(staging, true)
     commitDynamicFresh(name, base, rels, fresh)
   }
@@ -3764,7 +3761,8 @@ final class TableStore(private[tables] val spark: SparkSession,
     * column, and zone-dependent derivations are excluded — readers
     * fail open on both. */
   private def writeEqSidecar(name: String, keys: DataFrame,
-      pCols: Seq[String], prefix: String = "del"): String = {
+      pCols: Seq[String], prefix: String = "del",
+      knownCount: Option[Long] = None): String = {
     val rel = s"$prefix-${java.util.UUID.randomUUID()}"
     val out = new HPath(deletesDir(name), rel)
     val sessionZone = spark.sessionState.conf.sessionLocalTimeZone
@@ -3797,15 +3795,16 @@ final class TableStore(private[tables] val spark: SparkSession,
     // tombstone batch, whose WHOLE pile every key-group task can afford
     // to read anyway (a 64k-key sidecar is ~1 MB). Count first (the
     // keys frame is tombstone-sized and cached so the write does not
-    // recompute it) and write small batches as ONE sorted file — the
-    // single-file early-return below then skips the stats pass too.
+    // recompute it; a caller that knows the count skips both) and write
+    // small batches as ONE sorted file — the single-file early-return
+    // below then skips the stats pass too.
     // graft.eq.clusterFloorRows overrides (0 forces clustering; scale
     // tools and the multi-slice specs use it).
     val floor = spark.conf.getOption("graft.eq.clusterFloorRows")
       .flatMap(_.toLongOption).getOrElse(TableStore.EqClusterFloorRows)
-    val cached = keys.persist()
+    val cached = if (knownCount.isDefined) keys else keys.persist()
     try {
-      if (cached.count() <= floor) {
+      if (knownCount.getOrElse(cached.count()) <= floor) {
         cached.coalesce(1).sortWithinPartitions(sortCols: _*)
           .write.parquet(out.toString)
         return rel
@@ -3813,7 +3812,7 @@ final class TableStore(private[tables] val spark: SparkSession,
       cached.repartitionByRange(sortCols: _*)
         .sortWithinPartitions(sortCols: _*)
         .write.parquet(out.toString)
-    } finally { cached.unpersist(); () }
+    } finally { if (knownCount.isEmpty) cached.unpersist(); () }
     val parquetFiles = listStatusRec(out)
       .count(_.getPath.getName.endsWith(".parquet"))
     if (parquetFiles < 2) return rel // one slice: nothing to ever skip
@@ -4467,9 +4466,15 @@ final class TableStore(private[tables] val spark: SparkSession,
   /** Net CDC application in ONE snapshot commit: drop every row whose key
     * appears in `keys`, then add `newRows` — the atomic replacement for the
     * reference's non-atomic delete-then-insert update
-    * (SparkDestinationStream.java:110-114; README.md:74-77). */
+    * (SparkDestinationStream.java:110-114; README.md:74-77).
+    * `distinctKeyCount`: the number of rows of `keys` when the caller
+    * knows them to be distinct key tuples (a net CDC batch is) — the
+    * commit then skips de-duplicating and counting them. */
   def applyNet(name: String, keys: DataFrame, newRows: DataFrame,
-      keyCols: Seq[String], meta: Map[String, String] = Map.empty): Unit = {
+      keyCols: Seq[String], meta: Map[String, String] = Map.empty,
+      distinctKeyCount: Option[Long] = None): Unit = {
+    def distinct(df: DataFrame) =
+      if (distinctKeyCount.isDefined) df else df.distinct()
     // `write.merge.mode=merge-on-read`: the CDC tombstone pattern at
     // scale — ONE commit carrying an equality-delete sidecar over the
     // touched keys plus the appended upserts, no data file rewritten.
@@ -4483,9 +4488,9 @@ final class TableStore(private[tables] val spark: SparkSession,
     if (properties(name).get("write.merge.mode").contains("merge-on-read")) {
       val sch = schema(name)
       val m = physMap(name)
-      val rel = writeEqSidecar(name, keys.select(keyCols.map { c =>
+      val rel = writeEqSidecar(name, distinct(keys.select(keyCols.map { c =>
         col(c).cast(sch(sch.fieldIndex(c)).dataType).as(physOf(m, c))
-      }: _*).distinct(), keyCols.map(c => physOf(m, c)))
+      }: _*)), keyCols.map(c => physOf(m, c)), knownCount = distinctKeyCount)
       val appended = writeDataFiles(name, alignTo(name, sch, newRows))
       commitManifest(name, currentVersion(name), Set.empty, appended,
         appended, meta = meta,
@@ -4498,7 +4503,7 @@ final class TableStore(private[tables] val spark: SparkSession,
     val baseManifest = currentManifest(name)
     val base = versionOf(baseManifest)
     val rels = readLines(new HPath(tdir(name), baseManifest))
-    val distinctKeys = keys.select(keyCols.map(col): _*).distinct()
+    val distinctKeys = distinct(keys.select(keyCols.map(col): _*))
     var removed = Set.empty[String]
     var rewritten = Seq.empty[String]
     if (rels.nonEmpty) {
@@ -4515,11 +4520,15 @@ final class TableStore(private[tables] val spark: SparkSession,
         // be projected in the scan stage, BEFORE the join: after a
         // non-broadcast (shuffled) join it evaluates in a post-shuffle
         // stage and returns "", which would silently mark nothing affected.
+        // Each task de-duplicates its own file names (a handful): one
+        // job, no exchange.
+        val str = org.apache.spark.sql.Encoders.STRING
         val affected = readFiles(name, candidatePaths)
           .withColumn("__file", input_file_name())
           .join(distinctKeys, keyCols, "left_semi")
-          .select(col("__file")).distinct()
-          .collect().map(r => fileName(r.getString(0))).toSet
+          .select(col("__file")).as(str)
+          .mapPartitions(_.toSet.iterator)(str)
+          .collect().map(fileName).toSet
         if (affected.nonEmpty) {
           val affectedPaths = candidatePaths.filter(p => affected.contains(fileName(p)))
           val survivors = readFiles(name, affectedPaths,
@@ -5388,103 +5397,65 @@ final class TableStore(private[tables] val spark: SparkSession,
 
   // ---- zone maps ----------------------------------------------------------
 
-  /** Per-file min/max of the zone columns, captured at write time from the
-    * fresh files' parquet footers (aggregate pushdown — no data scan) and
-    * kept as tiny driver-readable sidecars. This is the Iceberg-manifest
-    * column-stats idea: a mutation can discard files whose key range
-    * cannot intersect the batch WITHOUT opening them — at 100 TB that is
-    * the difference between touching a few files and listing-scanning the
-    * whole table. */
-  private def writeZoneStats(name: String, relPaths: Seq[String]): Unit = {
-    val zc = zoneCols(name) // physical names — stable across renames
-    val bc = bloomCols(name) // physical names
-    if (relPaths.isEmpty) return
+  /** Per-file min/max of the zone columns, null counts, NDV sketches and
+    * blooms, captured at write time ([[FileStats]]) and kept as tiny
+    * driver-readable sidecars. This is the Iceberg-manifest column-stats
+    * idea: a mutation can discard files whose key range cannot intersect
+    * the batch WITHOUT opening them — at 100 TB that is the difference
+    * between touching a few files and listing-scanning the whole table.
+    * `spec` is the table's [[fileStatsSpec]]. */
+  private def writeFileStats(name: String, rel: String, spec: FileStatsSpec,
+      st: FileStats): Unit = {
+    val zc = spec.zoneCols
+    val bc = spec.bloomCols
     if (zc.isEmpty && bc.isEmpty) {
-      // no stats job needed — record per-file ROW COUNTS from the fresh
-      // parquet footers (driver-side, O(new files), no cluster job,
-      // parallel pool — sequential reads made stat-less partitioned
-      // commits O(files × latency)): metadata-only count(*) still works
-      // on stat-less tables
-      parFiles(relPaths) { rel =>
-        footerRowCount(new HPath(dataDir(name), rel)).foreach { n =>
-          writeString(statsPath(name, rel), s"""{"__rows": $n}""")
-        }
-      }
+      // row counts alone keep metadata-only count(*) working
+      writeString(statsPath(name, rel), s"""{"__rows": ${st.rows}}""")
       return
     }
-    val sch = physSchema(name)
-    val paths = relPaths.map(r => new HPath(dataDir(name), r).toString)
-    // ONE job for all fresh files (grouped by file), not one per file —
-    // the data is page-cache hot right after the write. Row counts and
-    // per-file blooms ride in the same aggregation as the zone min/max.
-    // (A per-file footer-only read via aggregate pushdown is the
-    // alternative when re-scanning fresh data is too costly.)
-    val items = bloomItems(name)
+    val zonePairs = zc.zip(st.bounds).map { case (c, (lo, hi)) =>
+      s""""$c": [${statJson(lo)}, ${statJson(hi)}]"""
+    }
+    // null count (Iceberg null_value_counts): zone min/max ignore nulls,
+    // so IS NULL skipping and null-aware ordered pruning are unsound
+    // without it
+    val nullPairs = zc.zip(st.nulls).map { case (c, n) => s""""$c": $n""" }
     // per-file HLL sketch per zone column (Iceberg's puffin NDV idea):
     // mergeable, so the commit path unions them into ONE table-level
-    // sketch per column — the CBO distinctCount at plan time. Input is
-    // the column itself for the types datasketches takes natively,
-    // cast to string otherwise (injective on distinct values).
-    def hllInput(c: String): org.apache.spark.sql.Column = {
-      val dt = NestedSchema.resolve(sch, c.split('.').toSeq).map(_.dataType)
-      dt match {
-        case Some(org.apache.spark.sql.types.IntegerType |
-            org.apache.spark.sql.types.LongType |
-            org.apache.spark.sql.types.StringType) => col(c)
-        case Some(org.apache.spark.sql.types.ShortType |
-            org.apache.spark.sql.types.ByteType) => col(c).cast("int")
-        case _ => col(c).cast("string")
-      }
+    // sketch per column — the CBO distinctCount at plan time
+    val hllPairs = zc.zip(st.hll).map { case (c, bytes) =>
+      s""""$c": "${java.util.Base64.getEncoder.encodeToString(bytes)}""""
     }
-    val aggs = (count(lit(1)).as("__n") +:
-      zc.flatMap(c => Seq(min(col(c)), max(col(c))))) ++
-      zc.map(c => count(col(c))) ++ // non-null count → per-file null count
-      bc.map(c => graft.functions.BloomAgg.bloom_build(
-        col(c), items, TableStore.BloomFpp)) ++
-      zc.map(c => hll_sketch_agg(hllInput(c)))
-    val rows = spark.read.schema(sch).parquet(paths: _*)
-      .groupBy(input_file_name().as("__f"))
-      .agg(aggs.head, aggs.tail: _*).collect()
-    val byName = rows.map(r => fileName(r.getString(0)) -> r).toMap
-    relPaths.foreach { rel =>
-      // a file the groupBy produced no row for has zero rows (promoteStaged
-      // drops those, but belt-and-braces: any such file must still record a
-      // count or the whole snapshot loses metadata-only aggregates)
-      if (!byName.contains(fileName(rel)))
-        footerRowCount(new HPath(dataDir(name), rel)).foreach { n =>
-          writeString(statsPath(name, rel), s"""{"__rows": $n}""")
-        }
-      byName.get(fileName(rel)).foreach { row =>
-        val nRows = row.getLong(1)
-        val zonePairs = zc.zipWithIndex.map { case (c, i) =>
-          s""""$c": [${statJson(row.get(2 * i + 2))}, ${statJson(row.get(2 * i + 3))}]"""
-        }
-        // null count = rows − non-null count (Iceberg null_value_counts):
-        // zone min/max ignore nulls, so IS NULL skipping and null-aware
-        // ordered pruning are unsound without it
-        val nullPairs = zc.zipWithIndex.map { case (c, i) =>
-          s""""$c": ${nRows - row.getLong(2 + 2 * zc.length + i)}"""
-        }
-        // per-file NDV sketch, base64 — an all-null file aggregates to a
-        // null sketch; record an EMPTY sketch so consolidation still sees
-        // full coverage (absence would disable table NDV forever)
-        val hllPairs = zc.zipWithIndex.map { case (c, i) =>
-          val bytes = Option(row.getAs[Array[Byte]](2 + 3 * zc.length + bc.length + i))
-            .getOrElse(new org.apache.datasketches.hll.HllSketch(
-              TableStore.HllLgK).toCompactByteArray)
-          s""""$c": "${java.util.Base64.getEncoder.encodeToString(bytes)}""""
-        }
-        val pairs = zonePairs ++ Seq(
-          s""""__rows": $nRows""",
-          s""""__nulls": ${nullPairs.mkString("{", ",", "}")}""",
-          s""""__hll": ${hllPairs.mkString("{", ",", "}")}""")
-        writeString(statsPath(name, rel), pairs.mkString("{", ",", "}"))
-        bc.zipWithIndex.foreach { case (c, i) =>
-          val bytes = row.getAs[Array[Byte]](2 + 3 * zc.length + i)
-          writeBytes(bloomPath(name, rel, c), bytes)
-        }
-      }
+    val pairs = zonePairs ++ Seq(
+      s""""__rows": ${st.rows}""",
+      s""""__nulls": ${nullPairs.mkString("{", ",", "}")}""",
+      s""""__hll": ${hllPairs.mkString("{", ",", "}")}""")
+    writeString(statsPath(name, rel), pairs.mkString("{", ",", "}"))
+    bc.zip(st.blooms).foreach { case (c, bytes) =>
+      writeBytes(bloomPath(name, rel, c), bytes)
     }
+  }
+
+  /** What the stats sidecars of `name` record, for rows laid out as
+    * `dataSchema` (physical names). */
+  private[tables] def fileStatsSpec(name: String,
+      dataSchema: StructType): FileStatsSpec =
+    FileStatsSpec(physSchema(name), dataSchema, zoneCols(name),
+      bloomCols(name), bloomItems(name), TableStore.BloomFpp,
+      TableStore.HllLgK, spark.sessionState.conf.sessionLocalTimeZone)
+
+  /** Stats sidecars of files graft did not write (adopted by addFiles,
+    * or legacy files an analyze backfills): ONE scan job over them. */
+  private def scanFileStats(name: String, rels: Seq[String]): Unit = {
+    if (rels.isEmpty) return
+    val sch = physSchema(name)
+    val spec = fileStatsSpec(name, sch)
+    val paths = rels.map(r => new HPath(dataDir(name), r).toString)
+    val got = spec.scan(spark, paths)
+    parFiles(rels.zip(paths)) { case (rel, p) =>
+      writeFileStats(name, rel, spec, got(p))
+    }
+    ()
   }
 
   /** Driver-side parallel map for per-file metadata I/O (footer reads,
@@ -5810,7 +5781,7 @@ final class TableStore(private[tables] val spark: SparkSession,
     }
   }
 
-  private def statJson(v: Any): String = v match {
+  private[tables] def statJson(v: Any): String = v match {
     case null => "null"
     case s: String => "\"" + s.flatMap {
       case '"' => "\\\""
@@ -6015,7 +5986,8 @@ final class TableStore(private[tables] val spark: SparkSession,
       hiddenRange.contains(physOf(m, c)))
     if (cols.isEmpty) return Map.empty
     val aggs = cols.flatMap(c => Seq(min(col(c)), max(col(c))))
-    val row = keys.agg(aggs.head, aggs.tail: _*).collect()(0)
+    // one task over the (tombstone-sized) keys: no exchange, one job
+    val row = keys.coalesce(1).agg(aggs.head, aggs.tail: _*).collect()(0)
     // temporal collect types → the stat domain (micros / epoch days as
     // Long), so bounds compare against zone stats and the synthetic
     // hidden-partition bounds; other types pass through unchanged
@@ -6156,69 +6128,53 @@ final class TableStore(private[tables] val spark: SparkSession,
         if (sortSpec.isEmpty) distributed
         else distributed.sortWithinPartitions(
           (dirCols.map(c => col(s"`$c`").asc) ++ sortKeys): _*)
-      val writer = sorted.write.mode("overwrite")
-      (if (dirCols.isEmpty) writer else writer.partitionBy(dirCols: _*))
-        .parquet(staging.toString)
-      promoteStaged(name, staging, None)
+      // each file's stats are folded while the tasks write it
+      val tracker = new FileStatsTracker(fileStatsSpec(name,
+        StructType(sorted.schema.filterNot(f => dirCols.contains(f.name)))))
+      Bridge.writeParquet(sorted, staging.toString, dirCols, Seq(tracker))
+      promoteStaged(name, staging, tracker.statsOf(listStatusRec(staging)
+        .map(_.getPath).filter(_.getName.endsWith(".parquet"))
+        .map(relativize(staging, _))))
     } finally { fs.delete(staging, true); () } // never strand staging garbage
   }
 
   /** Adopt staged parquet files (hive-partition-dir layout, PHYSICAL
     * column names) into the table's data directory under fresh unique
     * names, preserving partition subdirs and prefixing the CURRENT
-    * partition-spec generation; writes zone/bloom sidecars for the
-    * adopted files and returns their rel paths. `only` restricts
-    * adoption to the listed staging-relative paths (a distributed
-    * writer's committed task outputs — speculative/retried duplicates
-    * are left behind for the caller's staging cleanup). */
+    * partition-spec generation; writes the stats and bloom sidecars from
+    * the writer's per-file stats and returns the adopted rel paths.
+    * `staged` maps the staging-relative paths to adopt — the files the
+    * writer's committed tasks reported — to their stats; speculative or
+    * retried duplicates are left behind for the caller's staging
+    * cleanup. ZERO-ROW files are not adopted (a CoW rewrite whose
+    * partition lost every row writes a footer-only parquet): committing
+    * one would bloat the manifest with a dead file forever. */
   private[tables] def promoteStaged(name: String, staging: HPath,
-      only: Option[Set[String]]): Seq[String] = {
+      staged: Map[String, FileStatsPartial]): Seq[String] = {
     val id = UUID.randomUUID().toString.take(8)
     // evolved-spec generations land under their `spec-<id>/` prefix,
     // so a file's rel path always identifies its layout
     val specId = currentSpecId(name)
     val specPrefix = if (specId == 0) "" else s"spec-$specId/"
-    val parts0 = listStatusRec(staging)
-      .filter(st => st.getPath.getName.endsWith(".parquet"))
-      .filter(st => only.forall(_.contains(relativize(staging, st.getPath))))
-      // drop ZERO-ROW files (a CoW rewrite whose partition lost every row
-      // writes a footer-only parquet): committing one bloats the manifest
-      // with a dead file forever, and the commit-time stats job — a
-      // groupBy over the rows — records nothing for it, silently
-      // disabling metadata-only count(*) for the whole snapshot.
-      // Footer-checked ONLY below the size floor: a footer-only parquet
-      // is a few hundred bytes, so large commits (files sized near
-      // maxPartitionBytes) pay ZERO per-file driver round-trips here —
-      // the length came with the listing. Fail-open: an unreadable
-      // footer keeps the file. Checks run on the parallel pool: a
-      // hash-distributed partitioned commit lands hundreds of small
-      // files and sequential footer reads made promotion O(files).
-    val parts = locally {
-      val pre = parts0
-      val keep = parFiles(pre)(st =>
-        st.getLen >= TableStore.EmptyFileCheckBytes ||
-          !footerRowCount(st.getPath).contains(0L))
-      pre.zip(keep).collect { case (st, true) => st.getPath }
-        .sortBy(_.toString)
-    }
-    // renames run on the parallel pool (distinct targets; mkdirs is
-    // idempotent under the concurrent parent-dir races)
-    val named = parFiles(parts.zipWithIndex) { case (p, i) =>
-      val subDir = {
-        val rel = relativize(staging, p)
-        val cut = rel.lastIndexOf('/')
-        if (cut < 0) "" else rel.substring(0, cut)
-      }
+    val spec = fileStatsSpec(name, physSchema(name))
+    val parts = staged.toSeq.filter(_._2.rows > 0).sortBy(_._1)
+    // renames and sidecar writes run on the parallel pool (distinct
+    // targets; mkdirs is idempotent under the concurrent parent-dir
+    // races): a hash-distributed partitioned commit lands hundreds of
+    // files, and one blocking round-trip per file made promotion O(files)
+    parFiles(parts.zipWithIndex) { case ((stagedRel, stats), i) =>
+      val cut = stagedRel.lastIndexOf('/')
+      val subDir = if (cut < 0) "" else stagedRel.substring(0, cut)
       val fn = f"$id-part$i%05d.parquet"
       val rel = specPrefix +
         (if (subDir.isEmpty) fn else s"$subDir/$fn")
       val target = new HPath(dataDir(name), rel)
       fs.mkdirs(target.getParent)
-      require(fs.rename(p, target), s"rename $p -> $target failed")
+      val src = new HPath(staging, stagedRel)
+      require(fs.rename(src, target), s"rename $src -> $target failed")
+      writeFileStats(name, rel, spec, spec.finish(Seq(stats)))
       rel
     }
-    writeZoneStats(name, named)
-    named
   }
 
   /** Commit a SQL row-level rewrite: adopt the distributed writer's
@@ -6228,17 +6184,15 @@ final class TableStore(private[tables] val spark: SparkSession,
     * rules as every other CoW mutation. A no-op plan (nothing removed,
     * nothing staged) commits nothing. */
   private[tables] def commitRewriteStaged(name: String, base: Int,
-      removed: Set[String], staging: HPath, kept: Set[String],
+      removed: Set[String], staging: HPath,
+      kept: Map[String, FileStatsPartial],
       idKept: Set[String] = Set.empty): Unit = {
     try {
       // id-carrying files (row lineage) promote separately so the commit
       // excludes them from virtual-range assignment
-      val idAdded =
-        if (idKept.isEmpty || !fs.exists(staging)) Nil
-        else promoteStaged(name, staging, Some(idKept))
-      val added =
-        if (!fs.exists(staging)) Nil
-        else promoteStaged(name, staging, Some(kept -- idKept))
+      val (idStaged, freshStaged) = kept.partition(e => idKept(e._1))
+      val idAdded = promoteStaged(name, staging, idStaged)
+      val added = promoteStaged(name, staging, freshStaged)
       if (removed.nonEmpty || added.nonEmpty || idAdded.nonEmpty)
         commitManifest(name, base, removed, idAdded ++ added, Nil,
           idAdds = idAdded.toSet)
@@ -6251,12 +6205,10 @@ final class TableStore(private[tables] val spark: SparkSession,
     * delete sidecar. Appended files are untouched by the sidecar by
     * construction (position masks are file-scoped). */
   private[tables] def commitDeltaStaged(name: String, staging: HPath,
-      keptData: Set[String], keptDel: Set[String],
+      keptData: Map[String, FileStatsPartial], keptDel: Set[String],
       keptIdData: Set[String] = Set.empty): Unit = {
     try {
       if (keptData.isEmpty && keptDel.isEmpty) return
-      // move coordinates OUT of staging first so promoteStaged's listing
-      // only adopts data files
       val newDeletes =
         if (keptDel.isEmpty) Nil
         else {
@@ -6272,15 +6224,10 @@ final class TableStore(private[tables] val spark: SparkSession,
         }
       // id-carrying files (row lineage: update-after images) promote
       // SEPARATELY so the commit can exclude them from virtual-range
-      // assignment; the rename consumes them, so the second promotion's
-      // listing sees only the fresh files
-      val idAdded =
-        if (keptIdData.isEmpty || !fs.exists(staging)) Nil
-        else promoteStaged(name, staging, Some(keptIdData))
-      val freshKept = keptData -- keptIdData
-      val added =
-        if (freshKept.isEmpty || !fs.exists(staging)) Nil
-        else promoteStaged(name, staging, Some(freshKept))
+      // assignment
+      val (idStaged, freshStaged) = keptData.partition(e => keptIdData(e._1))
+      val idAdded = promoteStaged(name, staging, idStaged)
+      val added = promoteStaged(name, staging, freshStaged)
       if (added.nonEmpty || idAdded.nonEmpty || newDeletes.nonEmpty)
         commitManifest(name, currentVersion(name), Set.empty,
           idAdded ++ added, idAdded ++ added,
@@ -6537,7 +6484,7 @@ final class TableStore(private[tables] val spark: SparkSession,
     * carried files copy their entries from the previous snapshot's
     * consolidated file (one read, re-VALIDATED at parse so corrupt or
     * pre-widening entries are scrubbed instead of propagated); fresh
-    * files read the sidecar writeZoneStats just wrote / one
+    * files read the sidecar promoteStaged just wrote / one
     * getFileStatus (page-hot, O(new files)). A legacy table's first
     * commit here pays one O(files) sweep and is consolidated
     * thereafter. Files with no stats anywhere stay absent = never
@@ -6843,10 +6790,10 @@ object TableStore {
   val DefaultBloomItems: Long = 100000L
   val BloomFpp: Double = 0.03
 
-  /** Staged files at least this large skip the zero-row footer check in
-    * [[TableStore.promoteStaged]]: a footer-only (zero-row) parquet is a
+  /** Adopted files at least this large skip the zero-row footer check in
+    * [[TableStore.addFiles]]: a footer-only (zero-row) parquet is a
     * few hundred bytes — far below this — so normally-sized data files
-    * cost no per-file driver read at commit time. Generous headroom for
+    * cost no per-file driver read at adoption. Generous headroom for
     * wide schemas whose footer metadata alone runs to kilobytes. */
   val EmptyFileCheckBytes: Long = 64 * 1024L
 

@@ -43,6 +43,26 @@ object Bridge {
       isStreaming = false)
   }
 
+  /** `df` executed once, its rows persisted: the frame over them and the
+    * RDD to unpersist. Planning and the shuffles run now; the rows are
+    * computed and kept by the first action on the frame. This is a
+    * lazy `localCheckpoint` the caller can release: the rows keep the
+    * partitioning adaptive execution gives a plain action (a small
+    * batch coalesces to one partition, so a write from it lands one
+    * file — `Dataset.cache()` keeps the shuffles' configured partition
+    * count), and the frame keeps `df`'s size estimate, so joins against
+    * it plan as they did against `df`. */
+  def persisted(df: org.apache.spark.sql.DataFrame)
+      : (org.apache.spark.sql.DataFrame,
+        org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow]) = {
+    val ds = df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]
+    val rows = ds.queryExecution.toRdd.map(_.copy())
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    (org.apache.spark.sql.classic.Dataset.ofRows(ds.sparkSession,
+      org.apache.spark.sql.execution.LogicalRDD.fromDataset(rows, ds,
+        isStreaming = false)), rows)
+  }
+
   /** Register an extra planner strategy on a live session (idempotent) —
     * the runtime path for sessions built without withExtensions. */
   def addStrategy(spark: org.apache.spark.sql.SparkSession,
@@ -60,5 +80,36 @@ object Bridge {
     val cs = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
     if (!cs.experimental.extraOptimizations.contains(r))
       cs.experimental.extraOptimizations = cs.experimental.extraOptimizations :+ r
+  }
+
+  /** `df.write.partitionBy(partCols: _*).parquet(dir)` through Spark's
+    * own `FileFormatWriter`, with `trackers` seeing every row of every
+    * file the tasks write — the hook `DataFrameWriter` does not expose.
+    * Planning, sort-by-partition and commit protocol are the ones the
+    * plain writer uses; the output directory must not exist yet. */
+  def writeParquet(df: org.apache.spark.sql.DataFrame, dir: String,
+      partCols: Seq[String],
+      trackers: Seq[org.apache.spark.sql.execution.datasources.WriteJobStatsTracker])
+      : Unit = {
+    import org.apache.spark.sql.execution.SQLExecution
+    import org.apache.spark.sql.execution.datasources.FileFormatWriter
+    val cs = df.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    val qe = df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]].queryExecution
+    val hconf = cs.sessionState.newHadoopConf()
+    val out = new org.apache.hadoop.fs.Path(dir)
+    val qualified = out.getFileSystem(hconf).makeQualified(out).toString
+    val committer = org.apache.spark.internal.io.FileCommitProtocol.instantiate(
+      cs.sessionState.conf.fileCommitProtocolClass,
+      java.util.UUID.randomUUID().toString, qualified)
+    SQLExecution.withNewExecutionId(qe, Some("parquet write")) {
+      val plan = qe.executedPlan
+      val partAttrs = partCols.map(c => plan.output.find(_.name == c)
+        .getOrElse(throw new IllegalArgumentException(s"no column $c to partition by")))
+      FileFormatWriter.write(cs, plan,
+        new org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat,
+        committer, FileFormatWriter.OutputSpec(qualified, Map.empty, plan.output),
+        hconf, partAttrs, None, trackers, Map.empty)
+    }
+    ()
   }
 }

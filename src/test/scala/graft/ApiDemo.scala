@@ -6,6 +6,7 @@ import graft.cdc._
 import graft.tables.TableStore
 // Dev-only driver: exercises the public ingest API end-to-end as a
 // library consumer would (configure -> open -> write -> ack -> read back).
+// Run: sbt "Test/runMain graft.ApiDemo"
 object ApiDemo {
   def main(args: Array[String]): Unit = {
     val spark = SparkSession.builder().master("local[4]")

@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
   * under a LARGE multi-generation tombstone pile, measuring what the
   * round-11 sidecar machinery actually buys on the SPJ read path —
   * per-build sidecar bytes vs the pile, and exactness. Run:
-  * `sbt "runMain graft.tables.EqScaleCheck /root/testdata/sf0.1"` */
+  * `sbt "Test/runMain graft.tables.EqScaleCheck <sfDir>"` */
 object EqScaleCheck {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")

@@ -24,7 +24,7 @@ import org.apache.spark.sql.SparkSession
   *     chain — one graph build (one catalog sweep) regardless of M,
   *     not M × passes sweeps.
   *
-  * Run: `sbt "runMain graft.tables.GuardScaleCheck [nTables]"`. */
+  * Run: `sbt "Test/runMain graft.tables.GuardScaleCheck [nTables]"`. */
 object GuardScaleCheck {
   def main(args: Array[String]): Unit = {
     val n = args.headOption.map(_.toInt).getOrElse(400)

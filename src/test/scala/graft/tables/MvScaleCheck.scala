@@ -17,8 +17,8 @@ import org.apache.spark.sql.functions._
   *     and honestly reported as such (count/sum-only views skip the
   *     repair; clustered deletes prune the candidate scan).
   *
-  * Run: `sbt "runMain graft.tables.MvScaleCheck <sfDir>"` — compare
-  * /root/testdata/sf0.1 against a MakeScale 10x of it to see regime 1's
+  * Run: `sbt "Test/runMain graft.tables.MvScaleCheck <sfDir>"` — compare
+  * an sf0.1 directory against a MakeScale 10x of it to see regime 1's
   * ratio scale. */
 object MvScaleCheck {
   def main(args: Array[String]): Unit = {
