@@ -4,14 +4,9 @@ import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, Da
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders}
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, Predicate => CatalystPredicate}
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
+import org.apache.spark.sql.{DataFrame, Encoder, Encoders}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftshim.Bridge
-import org.apache.spark.sql.types.{BinaryType, DataType, LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.{BinaryType, LongType, StringType, StructField, StructType}
 import org.roaringbitmap.longlong.Roaring64Bitmap
 
 /** Deletion vectors: position-delete sidecars as compressed bitmaps —
@@ -159,8 +154,8 @@ private[graft] object DeletionVectors {
   }
 
   /** (pos_file, dv) → (pos_file, pos_idx) pairs, streaming per bitmap —
-    * the scale FALLBACK shape when the merged DV set is too large to
-    * broadcast and masking falls back to a distributed anti-join. */
+    * the scale FALLBACK shape when a delete mask is too large to hold
+    * per task and masking falls back to a distributed anti-join. */
   def explodePairs(dvs: DataFrame): DataFrame = {
     val ds = dvs
       .select(col(TableStore.PosFileCol).cast(StringType), col(DvCol))
@@ -174,71 +169,4 @@ private[graft] object DeletionVectors {
       }
     ds.toDF(TableStore.PosFileCol, TableStore.PosIdxCol)
   }
-
-  /** Filter Column dropping rows whose (fileCol, posCol) is masked by
-    * the broadcast DV map — the map-side mask that replaced the pair
-    * anti-join: no join, no shuffle, partitioning preserved. */
-  def notMaskedColumn(bc: Broadcast[Map[String, Array[Byte]]],
-      fileCol: Column, posCol: Column): Column =
-    Bridge.column(org.apache.spark.sql.catalyst.expressions.Not(
-      DvProbe(bc, Bridge.expression(fileCol),
-        Bridge.expression(posCol))))
-
-  /** Per-executor cache of deserialized DV maps keyed by broadcast id:
-    * bitmaps deserialize once per executor, not once per task. Every
-    * masked V1 read creates a FRESH broadcast, so the cache must not
-    * grow with query count — it's a byte-bounded LRU (each entry can
-    * hold up to `DvBroadcastMaxBytes` of bitmap, so the bound is on
-    * estimated bytes, sized to a few concurrent masks). An evicted
-    * entry just re-deserializes on next probe; correctness never
-    * depends on a hit. */
-  private val probeCache =
-    new BoundedLoadingCache(TableStore.DvProbeCacheMaxBytes, 64)
-
-  private[tables] def cachedBitmaps(
-      bc: Broadcast[Map[String, Array[Byte]]]): Map[String, Roaring64Bitmap] =
-    probeCache.getOrBuild(java.lang.Long.valueOf(bc.id)) {
-      bc.value.map { case (f, b) => f -> deserialize(b) }
-    } { m =>
-      m.iterator.map { case (f, bm) =>
-        bm.serializedSizeInBytes() + f.length * 2L + 96L
-      }.sum
-    }
-
-  /** Test hooks. */
-  private[tables] def probeCacheReset(): Unit = probeCache.reset()
-  private[tables] def probeCacheSize: Int = probeCache.size
-  private[tables] def probeCacheBytes: Long = probeCache.accountedBytes
-}
-
-/** `DvProbe(file, pos)`: true iff the broadcast deletion-vector map
-  * masks ordinal `pos` of data file `file`. Null-safe: a null input is
-  * "not masked" (position reads never produce null coordinates, but a
-  * filter must not silently drop rows on a null three-valued result).
-  * CodegenFallback keeps the surrounding stage in whole-stage codegen
-  * (the probe is invoked as a reference call from generated code). */
-private[tables] case class DvProbe(
-    bc: Broadcast[Map[String, Array[Byte]]],
-    left: Expression, right: Expression)
-  extends CatalystPredicate with CodegenFallback {
-
-  override def children: Seq[Expression] = Seq(left, right)
-  override def nullable: Boolean = false
-  override def dataType: DataType = org.apache.spark.sql.types.BooleanType
-
-  @transient private lazy val bitmaps = DeletionVectors.cachedBitmaps(bc)
-
-  override def eval(input: InternalRow): Any = {
-    val f = left.eval(input)
-    val p = right.eval(input)
-    if (f == null || p == null) false
-    else bitmaps.get(f.toString) match {
-      case Some(bm) => bm.contains(p.asInstanceOf[Long])
-      case None => false
-    }
-  }
-
-  override protected def withNewChildrenInternal(
-      newChildren: IndexedSeq[Expression]): Expression =
-    copy(left = newChildren(0), right = newChildren(1))
 }

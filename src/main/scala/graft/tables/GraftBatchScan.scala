@@ -1,10 +1,8 @@
 package graft.tables
 
-import scala.jdk.CollectionConverters._
-
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{And => CAnd, AttributeReference, BoundReference, EqualNullSafe, EqualTo, Expression, GreaterThan, GreaterThanOrEqual, In, LessThan, LessThanOrEqual, Literal, Murmur3HashFunction, StartsWith, UnsafeProjection, UnsafeRow}
+import org.apache.spark.sql.catalyst.expressions.{And => CAnd, AttributeReference, BoundReference, EqualNullSafe, EqualTo, Expression, GreaterThan, GreaterThanOrEqual, In, LessThan, LessThanOrEqual, Literal, Murmur3HashFunction, StartsWith, UnsafeProjection}
 import org.apache.spark.sql.connector.catalog.functions.{BoundFunction, ScalarFunction, UnboundFunction}
 import org.apache.spark.sql.connector.expressions.{Expressions, NamedReference, Transform}
 import org.apache.spark.sql.connector.expressions.filter.{Predicate => VPredicate}
@@ -15,7 +13,6 @@ import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.sources
 import org.apache.spark.sql.sources.Filter
 import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StringType, StructField, StructType}
-import org.apache.spark.sql.vectorized.ColumnarBatch
 
 /** Storage-partitioned-join scan: a TRUE DSv2 batch scan over a
   * bucket-partitioned managed table that reports its layout as
@@ -31,8 +28,9 @@ import org.apache.spark.sql.vectorized.ColumnarBatch
   * Eligibility is decided by [[TableStore.spjPlan]] (all-bucket spec, one
   * spec generation, no renames); every other table state falls back to
   * the V1 scan. Pending merge-on-read deletes do NOT fall back: the
-  * sidecars ship as an [[TableStore.SpjDeleteMask]] and every read task
-  * applies them in memory per file ([[GraftMaskedReaderFactory]]) —
+  * sidecars ship as a [[DeleteMask]] and every read task applies them
+  * in memory per file ([[GraftMaskedReaderFactory]], through the same
+  * [[MaskSets]] as the V1 read's map-side [[MoRMaskFilter]]) —
   * masking drops rows WITHIN a bucket, so KeyGroupedPartitioning (and
   * the zero-exchange join) survives the CDC tombstones that a busy
   * merge-on-read table always carries. File pruning reuses the SAME
@@ -165,13 +163,10 @@ private[tables] final class GraftBatchScan(store: TableStore, tbl: String,
         // build across a group's splits, so fine splits no longer
         // multiply the MoR re-read trade.
         val keyArr = key.toSeq(plan.bundle.pSchema).toArray
-        def pf(path: String, len: Long) =
-          PartitionedFile(partVals,
-            org.apache.spark.paths.SparkPath.fromPathString(path),
-            0L, len, Array.empty, 0L, len, Map.empty)
-        // rel path under data/ — the key the delete mask's fileSeqs
-        // and position sidecars use (same split the V1 masked read
-        // applies to _metadata.file_path)
+        def pf(path: String, len: Long) = MaskSets.pfOf(path, len, partVals)
+        // rel path under data/, as the manifest names it — the key of
+        // the delete mask's fileSeqs (position sidecars name files by
+        // the URL-encoded scan path instead: MaskSets.posKey)
         def rel(path: String) = path.split("/data/").last
         val cap = math.max(1L,
           spark.sessionState.conf.filesMaxPartitionBytes)
@@ -198,29 +193,6 @@ private[tables] final class GraftBatchScan(store: TableStore, tbl: String,
 
   // ---- reading --------------------------------------------------------------
 
-  /** Driver-built serializable parquet read closure (hadoopConf travels
-    * as its own broadcast — ParquetFileFormat is designed for exactly
-    * this shipping). Filters go to parquet for row-group/page skipping —
-    * exact evaluation stays with Spark's residual filter. Missing
-    * columns (post-evolution files) read back null; INT32/FLOAT pages
-    * upcast natively under a widened required schema. The vectorized
-    * reader stays ON but returns ROWS (returning_batch=false) — the DSv2
-    * row-based PartitionReader contract. */
-  private def buildRead(dataSchema: StructType, requiredSchema: StructType,
-      filters: Seq[Filter],
-      partitionSchema: StructType = new StructType())
-      : PartitionedFile => Iterator[InternalRow] =
-    new ParquetFileFormat().buildReaderWithPartitionValues(
-      spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession],
-      dataSchema = dataSchema,
-      partitionSchema = partitionSchema,
-      requiredSchema = requiredSchema,
-      filters = filters,
-      options = Map(
-        org.apache.spark.sql.execution.datasources.FileFormat
-          .OPTION_RETURNING_BATCH -> "false"),
-      hadoopConf = spark.sessionState.newHadoopConf())
-
   override def createReaderFactory(): PartitionReaderFactory = {
     val dataSch = plan.bundle.dataSch
     // identity columns come from the partition-values row, never the
@@ -233,63 +205,31 @@ private[tables] final class GraftBatchScan(store: TableStore, tbl: String,
       StructType(required.fields.filterNot(f => identityNames(f.name)))
     val dataFilters = pruning.toSeq
       .filter(_.references.forall(r => !identityNames(r)))
-    plan.mask match {
-      case None =>
-        val combined = StructType(dataRequired.fields ++ identitySchema.fields)
-        new GraftReaderFactory(
-          buildRead(dataSch, dataRequired, dataFilters, identitySchema),
-          if (combined == required) None else Some((combined, required)))
-      case Some(m) =>
-        // pending MoR deletes: widen the read so masking has what it
-        // needs — equality-delete key columns the projection pruned
-        // away, and the parquet reader's TRUE row ordinal (populated
-        // from page-store row ranges, so row-group/page skipping never
-        // desynchronizes it) when position sidecars are pending. The
-        // extra columns are dropped after masking. Identity-sourced key
-        // columns arrive via the appended partition values like any
-        // other identity column.
-        val eqCols = m.eq.flatMap(_.cols).distinct
-        val missing = eqCols.filterNot(c =>
-          dataRequired.fieldNames.contains(c) || identityNames(c))
-        val needPos = m.posFiles.nonEmpty || m.dvFiles.nonEmpty
-        var widenedData = missing.foldLeft(dataRequired)((s, c) =>
-          s.add(dataSch(dataSch.fieldIndex(c))))
-        // the reader-recognized temp name; MUST be nullable so the
-        // parquet reader classifies it "missing in file" and hands it
-        // to the RowIndexGenerator instead of erroring
-        if (needPos)
-          widenedData = widenedData.add(StructField(
-            ParquetFileFormat.ROW_INDEX_TEMPORARY_COLUMN_NAME,
-            LongType, nullable = true))
-        // the reader's true output layout: widened data ++ identity
-        val combined =
-          StructType(widenedData.fields ++ identitySchema.fields)
-        val sch = StructType(dataSch.fields ++ identitySchema.fields)
-        val keySchemas: Map[Seq[String], StructType] =
-          m.eq.map(_.cols).distinct.map { cs =>
-            cs -> StructType(cs.map(c =>
-              sch(sch.fieldIndex(c)).copy(nullable = true)))
-          }.toMap
-        val delFuncs = keySchemas.map { case (cs, ks) =>
-          cs -> buildRead(ks, ks, Nil)
-        }
-        val posSchema = StructType(Seq(
-          StructField(TableStore.PosFileCol, StringType, nullable = true),
-          StructField(TableStore.PosIdxCol, LongType, nullable = true)))
-        val posFunc =
-          if (m.posFiles.nonEmpty)
-            Some(buildRead(posSchema, posSchema, Nil)) else None
-        val dvSchema = StructType(
-          DeletionVectors.dvSchema.fields.map(_.copy(nullable = true)))
-        val dvFunc =
-          if (m.dvFiles.nonEmpty)
-            Some(buildRead(dvSchema, dvSchema, Nil)) else None
-        new GraftMaskedReaderFactory(
-          buildRead(dataSch, widenedData, dataFilters, identitySchema),
-          combined, required, m, delFuncs, keySchemas, posFunc, dvFunc,
-          plan.fields,
-          spark.sessionState.conf.sessionLocalTimeZone)
-    }
+    // pending MoR deletes widen the read with what masking needs: key
+    // columns the projection pruned away, and the parquet reader's TRUE
+    // row ordinal (from page-store row ranges, so page skipping never
+    // desynchronizes it) when position sidecars are pending; both are
+    // dropped after masking. With none pending the mask is empty.
+    val m = plan.mask.getOrElse(DeleteMask(Nil, Nil, Map.empty))
+    val missing = m.eq.flatMap(_.cols).distinct.filterNot(c =>
+      dataRequired.fieldNames.contains(c) || identityNames(c))
+    var widenedData = missing.foldLeft(dataRequired)((s, c) =>
+      s.add(dataSch(dataSch.fieldIndex(c))))
+    // the reader-recognized temp name; MUST be nullable so the parquet
+    // reader classifies it "missing in file" and hands it to the
+    // RowIndexGenerator instead of erroring
+    if (m.pos.nonEmpty)
+      widenedData = widenedData.add(StructField(
+        ParquetFileFormat.ROW_INDEX_TEMPORARY_COLUMN_NAME,
+        LongType, nullable = true))
+    // the reader's true output layout: widened data ++ identity
+    val combined = StructType(widenedData.fields ++ identitySchema.fields)
+    new GraftMaskedReaderFactory(
+      GraftBatchScan.buildRead(spark, spark.sessionState.newHadoopConf(),
+        dataSch, widenedData, dataFilters, identitySchema),
+      combined, required, m, store.maskReaders(m,
+        StructType(dataSch.fields ++ identitySchema.fields)),
+      plan.fields, spark.sessionState.conf.sessionLocalTimeZone)
   }
 
   // ---- statistics -----------------------------------------------------------
@@ -313,6 +253,32 @@ private[tables] final class GraftBatchScan(store: TableStore, tbl: String,
 }
 
 private[tables] object GraftBatchScan {
+  /** Driver-built serializable parquet read closure (hadoopConf travels
+    * as its own broadcast — ParquetFileFormat is designed for exactly
+    * this shipping). Filters go to parquet for row-group/page skipping —
+    * exact evaluation stays with Spark's residual filter. Missing
+    * columns (post-evolution files) read back null; INT32/FLOAT pages
+    * upcast natively under a widened required schema. The vectorized
+    * reader stays ON but returns ROWS (returning_batch=false) — the DSv2
+    * row-based PartitionReader contract. `hadoopConf` is written to, so
+    * pass a fresh one. */
+  private[tables] def buildRead(spark: SparkSession,
+      hadoopConf: org.apache.hadoop.conf.Configuration,
+      dataSchema: StructType, requiredSchema: StructType,
+      filters: Seq[Filter] = Nil,
+      partitionSchema: StructType = new StructType())
+      : PartitionedFile => Iterator[InternalRow] =
+    new ParquetFileFormat().buildReaderWithPartitionValues(
+      spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession],
+      dataSchema = dataSchema,
+      partitionSchema = partitionSchema,
+      requiredSchema = requiredSchema,
+      filters = filters,
+      options = Map(
+        org.apache.spark.sql.execution.datasources.FileFormat
+          .OPTION_RETURNING_BATCH -> "false"),
+      hadoopConf = hadoopConf)
+
 
   /** sources.Filter → Catalyst expression in the EXACT shapes
     * [[ZoneStats]] extracts bounds/probes from (AttributeReference vs
@@ -462,117 +428,30 @@ private[tables] final case class GraftInputPartition(keyVals: Array[Any],
   override def preferredLocations(): Array[String] = Array.empty
 }
 
-/** Executes the driver-built parquet read closure per file. Vectorized
-  * reads hand back ColumnarBatch disguised as InternalRow — flattened
-  * here row-by-row (the same contract FileSourceScan's consumers
-  * handle); reader close is registered by the closure itself on the
-  * task-completion listener. `reorder` (combined layout, output layout)
-  * reprojects when the closure's output order differs from the scan's
-  * readSchema — the identity-layout case, where partition values append
-  * at the END of each row. */
-private[tables] final class GraftReaderFactory(
-    readFunc: PartitionedFile => Iterator[InternalRow],
-    reorder: Option[(StructType, StructType)] = None)
-  extends PartitionReaderFactory {
-
-  override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
-    val files = p.asInstanceOf[GraftInputPartition].files.iterator
-    val proj: InternalRow => InternalRow = reorder match {
-      case None => identity
-      case Some((combined, output)) =>
-        val up = UnsafeProjection.create(
-          output.fieldNames.toIndexedSeq.map { c =>
-            val i = combined.fieldIndex(c)
-            BoundReference(i, combined(i).dataType,
-              combined(i).nullable): Expression
-          })
-        up(_)
-    }
-    new PartitionReader[InternalRow] {
-      private var cur: Iterator[Object] = Iterator.empty
-      private var row: InternalRow = _
-      override def next(): Boolean = {
-        while (true) {
-          if (cur.hasNext) {
-            cur.next() match {
-              case b: ColumnarBatch =>
-                val rows = b.rowIterator().asScala
-                cur = rows.asInstanceOf[Iterator[Object]] ++ cur
-              case r: InternalRow =>
-                row = proj(r)
-                return true
-            }
-          } else if (files.hasNext) {
-            cur = readFunc(files.next()).asInstanceOf[Iterator[Object]]
-          } else return false
-        }
-        false
-      }
-      override def get(): InternalRow = row
-      override def close(): Unit = ()
-    }
-  }
-}
-
-/** SPJ reader with pending merge-on-read deletes applied per file —
-  * the Iceberg MoR read shape: each task re-reads the (small, byte-
-  * capped at plan time) applicable delete sidecars, builds in-memory
-  * masks once, and drops masked rows while streaming its data files.
-  * Equality entries mask a file only when their commit sequence is
-  * ABOVE the file's recorded sequence (the rule that lets a later
-  * append re-insert a deleted key); delete keys containing any null
-  * mask nothing (equality semantics — and an all-set UnsafeRow probe
-  * can never bytewise-equal a set member with a null bit, so null data
-  * keys are safe by construction). Position entries mask by (rel path,
-  * true parquet row ordinal). Masking never moves a row between
-  * buckets, so the scan's reported KeyGroupedPartitioning stays exact.
-  *
-  * Mirrors [[TableStore.morMasked]]'s semantics (sequence classes,
-  * union-of-entries per key set, file-scoped position masks) without
-  * its DataFrame anti-joins — which would sit between scan and join
-  * and forfeit the zero-exchange plan this scan exists to keep. */
+/** The SPJ scan's reader: executes the driver-built parquet read
+  * closure per file (vectorized reads flattened to rows; reader close is
+  * registered by the closure itself) and applies the pending
+  * merge-on-read deletes per file — the Iceberg MoR read shape: each
+  * task loads the (small, byte-capped at plan time) applicable delete
+  * sidecars into in-memory masks once and drops masked rows while
+  * streaming. Sets are built and probed by [[MaskSets]], the same code
+  * the V1 read's [[MoRMaskFilter]] runs, so both share one masking
+  * semantics. What this reader adds is key-group scoping: a task's
+  * equality sets keep only keys whose derived partition value is the
+  * task's, and skip sidecar files whose ranges exclude it. Masking
+  * never moves a row between buckets, so the scan's reported
+  * KeyGroupedPartitioning stays exact. `widened` (the closure's layout:
+  * mask columns added, identity values appended) is reprojected to
+  * `output`, the scan's readSchema. */
 private[tables] final class GraftMaskedReaderFactory(
     readFunc: PartitionedFile => Iterator[InternalRow],
     widened: StructType, output: StructType,
-    mask: TableStore.SpjDeleteMask,
-    delFuncs: Map[Seq[String], PartitionedFile => Iterator[InternalRow]],
-    keySchemas: Map[Seq[String], StructType],
-    posFunc: Option[PartitionedFile => Iterator[InternalRow]],
-    dvFunc: Option[PartitionedFile => Iterator[InternalRow]],
+    mask: DeleteMask,
+    readers: MaskReaders,
     specFields: Seq[PartitionField],
     sessionZone: String)
   extends PartitionReaderFactory {
 
-  private def pfOf(path: String, len: Long): PartitionedFile =
-    PartitionedFile(InternalRow.empty,
-      org.apache.spark.paths.SparkPath.fromPathString(path),
-      0L, len, Array.empty, 0L, len, Map.empty)
-
-  /** Vectorized readers hand back ColumnarBatch disguised as
-    * InternalRow — flatten to true rows (same contract as
-    * [[GraftReaderFactory]]). */
-  private def flatRows(f: PartitionedFile => Iterator[InternalRow],
-      file: PartitionedFile): Iterator[InternalRow] =
-    f(file).asInstanceOf[Iterator[Object]].flatMap {
-      case b: ColumnarBatch => b.rowIterator().asScala
-      case r: InternalRow => Iterator.single(r)
-    }
-
-  /** Key-group scoping of equality-delete keys: a row in this task has
-    * derived(field) == the task's partition value for EVERY layout
-    * field, and an equality key masks a row only when it EQUALS it on
-    * the key columns — so a key whose derived value differs from the
-    * task's can mask nothing here and is dropped at set-build time.
-    * One predicate per layout field whose source is a key column
-    * (bucket is the headline — per-task retained keys shrink ∝ 1/n —
-    * but the same argument holds for identity/days/truncate layouts).
-    * A null task value or a non-evaluating derivation keeps the key
-    * (fail open: extra keys cost memory, never correctness). Zone-
-    * DEPENDENT derivations (days/months/years over a zoned timestamp)
-    * are skipped entirely: a read-session zone differing from the
-    * write-time zone yields a real, non-null, MISMATCHED value — which
-    * the null/exception guards don't catch — and dropping an applicable
-    * tombstone on it would resurrect deleted rows. */
   /** Stat-domain range value → the Catalyst internal value the layout
     * expression evaluates over. None = unrepresentable (fail open —
     * the sidecar file is read, never skipped). */
@@ -686,6 +565,21 @@ private[tables] final class GraftMaskedReaderFactory(
         !f.isInstanceOf[PartitionField.PBucket] && cols.contains(f.source)
     }
 
+  /** Key-group scoping of equality-delete keys: a row in this task has
+    * derived(field) == the task's partition value for EVERY layout
+    * field, and an equality key masks a row only when it EQUALS it on
+    * the key columns — so a key whose derived value differs from the
+    * task's can mask nothing here and is dropped at set-build time.
+    * One predicate per layout field whose source is a key column
+    * (bucket is the headline — per-task retained keys shrink ∝ 1/n —
+    * but the same argument holds for identity/days/truncate layouts).
+    * A null task value or a non-evaluating derivation keeps the key
+    * (fail open: extra keys cost memory, never correctness). Zone-
+    * DEPENDENT derivations (days/months/years over a zoned timestamp)
+    * are skipped entirely: a read-session zone differing from the
+    * write-time zone yields a real, non-null, MISMATCHED value — which
+    * the null/exception guards don't catch — and dropping an applicable
+    * tombstone on it would resurrect deleted rows. */
   private def keyGroupScopes(taskKey: Array[Any], cols: Seq[String],
       ks: StructType): Seq[InternalRow => Boolean] =
     specFields.zipWithIndex.flatMap { case (f, i) =>
@@ -706,19 +600,15 @@ private[tables] final class GraftMaskedReaderFactory(
 
   override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
     val part = p.asInstanceOf[GraftInputPartition]
-    // mask state CACHED per executor ([[SpjMaskCache]]) — equality sets
-    // per KEY GROUP (scoped: a task's group retains only tombstones
-    // whose derived partition value matches, so retained keys divide by
-    // the layout width), position bitmaps once per mask (compressed —
-    // the whole table's tombstones fit in roaring-bitmap bytes). Splits
-    // of the same group share one sidecar build.
-    val eqSets: Seq[(Seq[String], Int, java.util.HashSet[UnsafeRow],
-        org.apache.spark.util.sketch.BloomFilter)] =
-      SpjMaskCache.getOrBuild(("eq", mask, part.keyVals.toSeq)) {
-        var bytesRead = 0L
+    // equality sets CACHED per executor ([[SpjMaskCache]]) per KEY GROUP
+    // (scoped: a task's group retains only tombstones whose derived
+    // partition value matches, so retained keys divide by the layout
+    // width); splits of the same group share one sidecar build
+    val eqSets: Seq[(Seq[String], Int, EqKeys)] =
+      if (mask.eq.isEmpty) Nil
+      else SpjMaskCache.getOrBuild(("eq", mask, part.keyVals.toSeq)) {
         val built = mask.eq.map { e =>
-          val ks = keySchemas(e.cols)
-          val proj = UnsafeProjection.create(ks)
+          val (ks, read) = readers.eq(e.cols)
           val scopes = keyGroupScopes(part.keyVals, e.cols, ks)
           // whole-file skip from the sorted sidecar's per-file ranges:
           // read only the files whose key slice can touch this task
@@ -729,100 +619,27 @@ private[tables] final class GraftMaskedReaderFactory(
               cr.get(c).exists { case (mn, mx) => t(mn, mx) }
             })
           }
-          val set = new java.util.HashSet[UnsafeRow]()
-          if (!nullGroupInapplicable(part.keyVals, e.cols))
-            e.files.foreach { case (path, len) =>
-              if (!skip(path)) {
-                bytesRead += len
-                flatRows(delFuncs(e.cols), pfOf(path, len)).foreach { r =>
-                  if (!(0 until ks.length).exists(r.isNullAt) &&
-                      scopes.forall(_(r))) {
-                    set.add(proj(r).copy()); ()
-                  }
-                }
-              }
-            }
-          // bloom prescreen for the probe loop: data rows are mostly
-          // NOT deleted, and a bit-array miss is cheaper than a
-          // HashSet walk — ~1.2 bytes/key at 1% fpp, false positives
-          // just fall through to the exact set
-          val bloom = org.apache.spark.util.sketch.BloomFilter
-            .create(math.max(set.size().toLong, 64L), 0.01)
-          set.forEach(k => bloom.putLong(k.hashCode().toLong))
-          (e.cols, e.seq, set, bloom)
+          val files =
+            if (nullGroupInapplicable(part.keyVals, e.cols)) Nil else e.files
+          (e.cols, e.seq,
+            MaskSets.eqKeys(read, files, ks, r => scopes.forall(_(r)), skip))
         }
         if (SpjMaskStats.enabled.get())
           SpjMaskStats.record(built.map(_._3.size.toLong).sum, 0L,
-            eqBytes = bytesRead)
+            eqBytes = built.map(_._3.bytesRead).sum)
         built
-      } { built =>
-        // estimated pinned bytes: UnsafeRow payload + ~48B HashSet entry
-        // overhead per retained key, + the bloom's bit array
-        built.iterator.map { case (_, _, set, bloom) =>
-          var b = 64L + bloom.bitSize() / 8
-          val it = set.iterator()
-          while (it.hasNext) b += it.next().getSizeInBytes + 48L
-          b
-        }.sum
-      }
-    // positional masks normalize to ONE roaring bitmap per data file:
-    // legacy pair sidecars add ordinals, deletion-vector sidecars OR
-    // deserialized bitmaps — memory is the COMPRESSED bitmap size, not
-    // an entry per tombstone (what lets the SpjMaskMaxBytes budget
-    // survive orders of magnitude more tombstones than the old
-    // HashSet[Long]-per-file representation); built ONCE per mask per
-    // executor, readers probe only their own files' entries
-    val posSets: Map[String, org.roaringbitmap.longlong.Roaring64Bitmap] =
-      SpjMaskCache.getOrBuild(("pos", mask)) {
-        val m = scala.collection.mutable.Map
-          .empty[String, org.roaringbitmap.longlong.Roaring64Bitmap]
-        posFunc.foreach { f =>
-          mask.posFiles.foreach { case (path, len) =>
-            flatRows(f, pfOf(path, len)).foreach { r =>
-              if (!r.isNullAt(0) && !r.isNullAt(1)) {
-                m.getOrElseUpdate(r.getUTF8String(0).toString,
-                  new org.roaringbitmap.longlong.Roaring64Bitmap())
-                  .addLong(r.getLong(1)); ()
-              }
-            }
-          }
-        }
-        dvFunc.foreach { f =>
-          mask.dvFiles.foreach { case (path, len) =>
-            flatRows(f, pfOf(path, len)).foreach { r =>
-              if (!r.isNullAt(0) && !r.isNullAt(1)) {
-                val bm = DeletionVectors.deserialize(r.getBinary(1))
-                m.get(r.getUTF8String(0).toString) match {
-                  case Some(acc) => acc.or(bm)
-                  case None =>
-                    m.update(r.getUTF8String(0).toString, bm)
-                }
-              }
-            }
-          }
-        }
-        val built = m.toMap
-        if (SpjMaskStats.enabled.get())
-          SpjMaskStats.record(0L,
-            built.valuesIterator.map(_.getLongCardinality).sum)
-        built
-      } { built =>
-        // roaring bitmaps: in-memory ≈ serialized form (+ map overhead)
-        built.iterator.map { case (f, bm) =>
-          bm.serializedSizeInBytes() + f.length * 2L + 96L
-        }.sum
-      }
-    val posOrd =
-      if (posFunc.isDefined || dvFunc.isDefined)
-        widened.fieldIndex(ParquetFileFormat.ROW_INDEX_TEMPORARY_COLUMN_NAME)
-      else -1
-    val keyProjs: Map[Seq[String], UnsafeProjection] =
-      mask.eq.map(_.cols).distinct.map { cols =>
-        cols -> UnsafeProjection.create(cols.map { c =>
-          val i = widened.fieldIndex(c)
-          BoundReference(i, widened(i).dataType, nullable = true): Expression
-        })
-      }.toMap
+      }(_.iterator.map(_._3.bytes).sum)
+    // positional masks: one roaring bitmap per data file, loaded once
+    // per sidecar per executor
+    val posMaps = mask.pos.map(MaskSets.cachedPositions(_, readers))
+    val posOrd = if (mask.pos.isEmpty) -1
+      else widened.fieldIndex(ParquetFileFormat.ROW_INDEX_TEMPORARY_COLUMN_NAME)
+    val eqProbes = eqSets.map { case (cols, seq, keys) =>
+      (seq, MaskSets.keyProjection(cols.map { c =>
+        val i = widened.fieldIndex(c)
+        BoundReference(i, widened(i).dataType, nullable = true): Expression
+      }), keys)
+    }
     val outProj: InternalRow => InternalRow =
       if (widened == output) identity
       else {
@@ -838,35 +655,25 @@ private[tables] final class GraftMaskedReaderFactory(
     new PartitionReader[InternalRow] {
       private var fi = -1
       private var cur: Iterator[InternalRow] = Iterator.empty
-      private var applicable: Seq[(UnsafeProjection,
-          java.util.HashSet[UnsafeRow],
-          org.apache.spark.util.sketch.BloomFilter)] = Nil
-      private var posSet: org.roaringbitmap.longlong.Roaring64Bitmap = null
+      private var fileMask: FileMask = _
       private var row: InternalRow = _
       private def advanceFile(): Boolean = {
         fi += 1
         if (fi >= part.files.length) return false
-        val fseq = mask.fileSeqs.getOrElse(part.rels(fi), 0)
-        applicable = eqSets.collect {
-          case (cols, seq, set, bloom) if seq > fseq && !set.isEmpty =>
-            (keyProjs(cols), set, bloom)
-        }
-        posSet = posSets.getOrElse(part.rels(fi), null)
-        cur = flatRows(readFunc, part.files(fi))
+        fileMask = new FileMask(eqProbes, posMaps,
+          mask.fileSeqs.getOrElse(part.rels(fi), 0),
+          part.files(fi).urlEncodedPath)
+        cur = MaskSets.flatRows(readFunc, part.files(fi))
         true
       }
       override def next(): Boolean = {
         while (true) {
           if (cur.hasNext) {
             val r = cur.next()
-            val masked =
-              (posSet != null && posSet.contains(r.getLong(posOrd))) ||
-                applicable.exists { case (proj, set, bloom) =>
-                  val k = proj(r)
-                  bloom.mightContainLong(k.hashCode().toLong) &&
-                    set.contains(k)
-                }
-            if (!masked) { row = outProj(r); return true }
+            if (fileMask.isEmpty || !fileMask.masked(r,
+                if (fileMask.hasPos) r.getLong(posOrd) else -1L)) {
+              row = outProj(r); return true
+            }
           } else if (!advanceFile()) return false
         }
         false
@@ -877,20 +684,18 @@ private[tables] final class GraftMaskedReaderFactory(
   }
 }
 
-/** Per-executor cache of built SPJ delete masks, keyed by mask content
-  * (sidecar paths + sequences — distinct per table snapshot) plus the
-  * key group for equality sets. Splits of the same key group share one
-  * sidecar build instead of re-reading per task, which is what lets
-  * masked tables keep FINE-GRAINED splits (bin-packed, partial-
-  * clustering-capable) without multiplying the Iceberg MoR re-read
-  * trade by the split count. Bounded by ESTIMATED BYTES (one entry can
-  * expand up to `SpjMaskMaxBytes` of sidecar into in-memory sets, so an
-  * entry-count bound alone could pin multiple GB per executor). On a
-  * real cluster each executor builds a group's mask at most once;
-  * local[n] shares one. */
+/** Per-executor cache of built delete masks. The V1 [[MoRMaskFilter]]
+  * and both readers' positional bitmaps key entries by sidecar: it is
+  * immutable, so a new snapshot loads only its new sidecars. The SPJ
+  * reader keys its scoped equality sets by mask plus key group, so the
+  * splits of a group share one build — what lets masked tables keep
+  * fine-grained splits without multiplying the MoR re-read trade.
+  * Bounded by ESTIMATED BYTES (an entry can expand up to
+  * `SpjMaskMaxBytes` of sidecar); the entry bound only caps bookkeeping,
+  * high enough that one read's sidecars never evict each other. */
 private[tables] object SpjMaskCache {
   private val cache =
-    new BoundedLoadingCache(TableStore.SpjMaskCacheMaxBytes, 32)
+    new BoundedLoadingCache(TableStore.SpjMaskCacheMaxBytes, 1024)
   def getOrBuild[T <: AnyRef](key: AnyRef)(build: => T)(
       sizeOf: T => Long): T = cache.getOrBuild(key)(build)(sizeOf)
   /** Test hook: clear between measurements. */

@@ -3,7 +3,7 @@ package graft.tables
 import java.util.UUID
 import org.apache.hadoop.fs.{FileContext, FileSystem, Options, Path => HPath}
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
-import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation, PartitionedFile}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftshim.Bridge
@@ -85,7 +85,8 @@ import org.apache.spark.sql.types.{BooleanType, ByteType, DateType, IntegerType,
 final class TableStore(private[tables] val spark: SparkSession,
     val root: String,
     hadoopProps: Map[String, String] = Map.empty,
-    coordinator: Option[CommitCoordinator] = None) {
+    coordinator: Option[CommitCoordinator] = None)
+  extends org.apache.spark.internal.Logging {
 
   private val hconf = {
     val c = spark.sessionState.newHadoopConf()
@@ -1715,21 +1716,23 @@ final class TableStore(private[tables] val spark: SparkSession,
     * single-generation fast path. */
   private def indexedRead(name: String, rels: Seq[String],
       version: Int, rowPos: Boolean = false,
-      rowIds: Boolean = false): DataFrame = {
+      rowIds: Boolean = false, mask: Option[DeleteMask] = None): DataFrame = {
     val bySpec = rels.groupBy(specOfRel)
     if (bySpec.size <= 1)
       indexedReadSpec(name, bySpec.headOption.map(_._1).getOrElse(0),
-        rels, version, rowPos, rowIds)
+        rels, version, rowPos, rowIds, mask)
     else
       bySpec.toSeq.sortBy(_._1)
         .map { case (id, rs) =>
-          indexedReadSpec(name, id, rs, version, rowPos, rowIds) }
+          indexedReadSpec(name, id, rs, version, rowPos, rowIds, mask) }
         .reduce(_ unionByName _)
   }
 
+  /** One spec generation's indexed read; `mask` (see [[morMasked]])
+    * filters the file relation itself, before the logical projection. */
   private def indexedReadSpec(name: String, specId: Int, rels: Seq[String],
       version: Int, rowPos: Boolean = false,
-      rowIds: Boolean = false): DataFrame = {
+      rowIds: Boolean = false, mask: Option[DeleteMask] = None): DataFrame = {
     if (rels.isEmpty) {
       var base = readFiles(name, Nil)
       if (rowIds)
@@ -1754,10 +1757,11 @@ final class TableStore(private[tables] val spark: SparkSession,
     MvRewriteRule.register(spark)
     val rel = HadoopFsRelation(idx, pSchema, dataSch, None,
       new ParquetFileFormat(), Map.empty[String, String])(spark)
-    val raw = Bridge.ofRows(spark, LogicalRelation(rel, isStreaming = false))
+    val scan = Bridge.ofRows(spark, LogicalRelation(rel, isStreaming = false))
+    val raw = mask.fold(scan)(m => scan.filter(maskFilter(name, m, scan)))
     // position-delete support: surface (file rel path, row ordinal) from
-    // the scan's hidden _metadata — resolvable only HERE, directly above
-    // the file relation, before any projection cuts it. The rel path is
+    // the scan's hidden _metadata — resolvable only HERE, above the file
+    // relation (and its mask), before any projection cuts it. The rel path is
     // recovered as the segment after the LAST "/data/" (partition values
     // escape '/', so no later segment can contain it).
     val posCols =
@@ -1931,7 +1935,7 @@ final class TableStore(private[tables] val spark: SparkSession,
     *  - one spec generation (mixed layouts union two relations — no
     *    single partitioning to report);
     *  - pending merge-on-read deletes are SERVED, not declined: the
-    *    sidecars ship to the readers as an [[TableStore.SpjDeleteMask]]
+    *    sidecars ship to the readers as a [[DeleteMask]]
     *    and every task masks its own files in memory (Iceberg's MoR read
     *    shape), so a CDC-busy merge-on-read table KEEPS its
     *    zero-exchange joins — masking is row-dropping within a bucket,
@@ -1944,7 +1948,8 @@ final class TableStore(private[tables] val spark: SparkSession,
     *    reader upcasts INT32/FLOAT pages natively under the widened
     *    required schema, same as the V1 relation).
     */
-  private[tables] def spjPlan(name: String): Option[TableStore.SpjPlan] = {
+  private[tables] def spjPlan(name: String,
+      maskCap: Long = TableStore.SpjMaskMaxBytes): Option[TableStore.SpjPlan] = {
     val rels = currentRelPaths(name)
     if (rels.isEmpty) return None
     val bySpec = rels.groupBy(specOfRel)
@@ -1961,26 +1966,16 @@ final class TableStore(private[tables] val spark: SparkSession,
     if (!TableStore.sameNameTree(schema(name), physSchema(name))) return None
     val version = currentVersion(name)
     val entries = readDeleteEntries(name, version)
-    val mask: Option[TableStore.SpjDeleteMask] =
+    val mask: Option[DeleteMask] =
       if (entries.isEmpty) None
       else {
-        val (posAll, eqE) =
-          entries.partition(e => TableStore.isPosEntry(e.cols))
-        val (dvE, posE) = posAll.partition(_.cols == Seq(TableStore.DvMarker))
         // no renames here (sameNameTree gate), so sidecar physical key
         // names ARE current logical names — but a dropped key column
         // cannot be masked by a raw reader
         val live = schema(name).fieldNames.toSet
-        if (!eqE.forall(_.cols.forall(live.contains))) return None
-        def sidecarFiles(rel: String): Seq[(String, Long)] =
-          listStatusRec(new HPath(deletesDir(name), rel))
-            .filter(_.getPath.getName.endsWith(".parquet"))
-            .map(st => (st.getPath.toString, st.getLen))
-        val eqSpecs = eqE.map(e =>
-          TableStore.SpjEqDelete(e.cols, e.seq, sidecarFiles(e.rel),
-            readEqRanges(name, e.rel)))
-        val posFiles = posE.flatMap(e => sidecarFiles(e.rel))
-        val dvFiles = dvE.flatMap(e => sidecarFiles(e.rel))
+        if (!entries.forall(e => TableStore.isPosEntry(e.cols) ||
+            e.cols.forall(live.contains))) return None
+        val m = deleteMask(name, version, entries, ranges = true)
         // the mask budget is PER TASK, so an entry whose layout-
         // clustered sidecar carries per-file derived ranges on a
         // layout field over a key column is charged only its worst
@@ -2002,18 +1997,21 @@ final class TableStore(private[tables] val spark: SparkSession,
         // ranges key by f.render (parameter-qualified; identity render =
         // the raw column name) so a respec'd transform cannot feed a
         // wrong-domain range into the budget — it just misses
-        def perTaskBytes(e: TableStore.SpjEqDelete): Long = {
+        def perTaskBytes(e: EqDelete): Long = {
           val full = e.files.map(_._2).sum
           val refined = budgetDims.filter(f => e.cols.contains(f.source))
             .flatMap(f =>
               TableStore.maxPointBytes(e.files, e.ranges, f.render))
           if (refined.isEmpty) full else math.min(full, refined.min)
         }
-        val totalBytes = eqSpecs.map(perTaskBytes).sum +
-          (posFiles ++ dvFiles).map(_._2).sum
-        if (totalBytes > TableStore.SpjMaskMaxBytes) return None
-        Some(TableStore.SpjDeleteMask(eqSpecs, posFiles, dvFiles,
-          readSeqs(name, version)))
+        val totalBytes = m.eq.map(perTaskBytes).sum +
+          m.pos.flatMap(_.files).map(_._2).sum
+        if (totalBytes > maskCap) {
+          logInfo(s"table $name is read through the V1 scan, not SPJ: its delete " +
+            s"mask charges $totalBytes bytes per task, over the $maskCap-byte cap")
+          return None
+        }
+        Some(m)
       }
     Some(TableStore.SpjPlan(version, fields,
       zoneIndexFor(name, specId, rels, version), mask))
@@ -2061,6 +2059,11 @@ final class TableStore(private[tables] val spark: SparkSession,
     * Non-`file` schemes keep `fs.listFiles(dir, true)`: on object
     * stores that is ONE flat listing, where a per-directory BFS would
     * pay one RPC per directory of a deep tree. */
+  /** The parquet part files of delete sidecar `rel`. */
+  private def sidecarParts(name: String, rel: String): Seq[org.apache.hadoop.fs.FileStatus] =
+    listStatusRec(new HPath(deletesDir(name), rel))
+      .filter(_.getPath.getName.endsWith(".parquet"))
+
   private def listStatusRec(dir: HPath): Seq[org.apache.hadoop.fs.FileStatus] = {
     if (!fs.exists(dir)) return Nil
     val buf = Seq.newBuilder[org.apache.hadoop.fs.FileStatus]
@@ -2374,8 +2377,7 @@ final class TableStore(private[tables] val spark: SparkSession,
         else "equality"
       val keyCols = if (TableStore.isPosEntry(e.cols)) "" else
         e.cols.mkString(",")
-      val parts = listStatusRec(new HPath(deletesDir(name), e.rel))
-        .filter(_.getPath.getName.endsWith(".parquet"))
+      val parts = sidecarParts(name, e.rel)
       org.apache.spark.sql.Row(e.rel, kind, keyCols, e.seq.toLong,
         parts.size.toLong, parts.map(_.getLen).sum)
     }
@@ -2924,7 +2926,7 @@ final class TableStore(private[tables] val spark: SparkSession,
         removed.map(lp.getOrElse(_, 0L)).sum
       if (newDel.nonEmpty)
         scope += 2L * cur.filter(prevS).map(l.getOrElse(_, 0L)).sum
-      if (removed.nonEmpty || newDel.nonEmpty) mutated = true
+      if (removed.nonEmpty || dels(v) != dels(parent)) mutated = true
     }
     (scope, now.values.sum, mutated)
   }
@@ -2941,9 +2943,9 @@ final class TableStore(private[tables] val spark: SparkSession,
     val prev = if (parent <= 0) Nil else relPathsOf(name, parent)
     val prevS = prev.toSet
     val removed = prev.filterNot(cur.toSet)
-    val newDeletes =
-      readDeleteEntries(name, v).toSet -- readDeleteEntries(name, parent).toSet
-    if (removed.isEmpty && newDeletes.isEmpty) Some(cur.filterNot(prevS))
+    val sameDeletes =
+      readDeleteEntries(name, v).toSet == readDeleteEntries(name, parent).toSet
+    if (removed.isEmpty && sameDeletes) Some(cur.filterNot(prevS))
     else None
   }
 
@@ -2960,7 +2962,15 @@ final class TableStore(private[tables] val spark: SparkSession,
     val curDel = readDeleteEntries(name, v)
     val prevDel = readDeleteEntries(name, parent).toSet
     val newDeletes = curDel.filterNot(prevDel)
-    if (removed.isEmpty && newDeletes.isEmpty) {
+    // shared files whose masked rows may differ: all of them under a new
+    // delete; under a delete the commit dropped without rewriting what it
+    // masked (a rollback), the files it applied to
+    val dropped = prevDel -- curDel
+    lazy val prevSeqs = readSeqs(name, parent)
+    val common = cur.filter(r => prevS(r) && (newDeletes.nonEmpty ||
+      dropped.exists(e => TableStore.isPosEntry(e.cols) ||
+        prevSeqs.getOrElse(r, 0) < e.seq)))
+    if (removed.isEmpty && newDeletes.isEmpty && common.isEmpty) {
       // pure append (or a metadata-only commit): the appended files ARE
       // the inserts — sequence rules say no earlier tombstone masks them
       if (added.isEmpty) emptyChanges(name, rowIds)
@@ -2969,9 +2979,7 @@ final class TableStore(private[tables] val spark: SparkSession,
         .withColumn(TableStore.ChangeTypeCol, lit("insert"))
         .withColumn(TableStore.CommitVersionCol, lit(v))
     } else {
-      val common = if (newDeletes.nonEmpty) cur.filter(prevS) else Nil
-      // pin the column ORDER on both sides: the masked read surfaces its
-      // anti-join key columns first, and the output keeps the table's
+      // pin the column ORDER on both sides: the output keeps the table's
       // order (the streaming source maps batch columns by position)
       val cols = (schema(name).fieldNames.toSeq ++
         (if (rowIds) Seq(TableStore.RowIdCol) else Nil))
@@ -3021,7 +3029,7 @@ final class TableStore(private[tables] val spark: SparkSession,
     * keyed in K, and the `v`-side read needs the added files alone.
     *
     * Returns that narrowing: K held on the driver as an IN list. A null
-    * key matches nothing, as under the anti-join mask. Each shared file
+    * key matches nothing, as under the delete mask. Each shared file
     * is still read once unless the scan's zone index drops it: by the
     * envelope [min, max] of K against the file's zone range, or by its
     * bloom or bucket when the table has them. Keys spread over the key
@@ -3038,11 +3046,9 @@ final class TableStore(private[tables] val spark: SparkSession,
       case Seq(p) if !TableStore.isPosEntry(pcols) => inv.get(p)
       case _ => None
     }
-    val eligible = key.exists(k => schema(name)(k).dataType match {
-        case ByteType | ShortType | IntegerType | LongType | DateType |
-            TimestampType | TimestampNTZType => true
-        case t => t == StringType
-      }) && newDel.forall(e => e.cols == pcols && e.seq == v) &&
+    val eligible =
+      key.exists(k => TableStore.inListExact(schema(name)(k).dataType)) &&
+      newDel.forall(e => e.cols == pcols && e.seq == v) &&
       prevDel.subsetOf(curDel.toSet) && {
         val seqs = readSeqs(name, v)
         common.forall(r => seqs.getOrElse(r, 0) < v)
@@ -4019,8 +4025,9 @@ final class TableStore(private[tables] val spark: SparkSession,
   /** Merge-on-read DELETE: writes the key set as an equality-delete file
     * and commits METADATA ONLY — no data file is opened, rewritten, or
     * even listed. Cost is O(|keys|) regardless of table size; reads
-    * anti-join pending delete files until [[materializeDeletes]] (or any
-    * CoW mutation / [[compact]]) folds them in. At 100 TB this is the
+    * mask pending delete files in the scan ([[morMasked]]) until
+    * [[materializeDeletes]] (or any CoW mutation / [[compact]]) folds
+    * them in. At 100 TB this is the
     * difference between a sub-second tombstone commit and rewriting
     * every file the keys touch — the Iceberg v2 equality-delete design
     * (the reference's delete path is copy-on-write via Iceberg's
@@ -4047,94 +4054,131 @@ final class TableStore(private[tables] val spark: SparkSession,
       newDeletes = Seq((rel, pCols)))
   }
 
-  /** Snapshot read with pending equality deletes applied. Files are
-    * grouped into "mask classes" by how many pending deletes apply to
-    * them (those with seq strictly above the file's); each class is one
-    * zone-indexed scan anti-joined with exactly its applicable key sets,
-    * so a file appended AFTER a delete is never masked by it. With no
-    * pending deletes this is the plain indexed read — including its
+  /** Snapshot read with pending merge-on-read deletes applied: ONE
+    * indexed read whose file relations carry the snapshot's [[DeleteMask]]
+    * as a [[MoRMaskFilter]] in the scan's own stage. An equality sidecar
+    * masks a row only in files whose sequence is below its own, so a key
+    * re-inserted after its delete stays; positional sidecars mask by
+    * (file, ordinal). Executors load the sidecars through the mask cache,
+    * so the mask starts no job. A mask over `maskCap` bytes, the cap the
+    * SPJ scan declines at, masks through [[antiJoinMasked]] instead. With
+    * no pending deletes this is the plain indexed read, including its
     * metadata-only aggregate rewrite, which a masked read must NOT take
-    * (the anti-join sits between scan and aggregate, so the rule cannot
-    * fire on a masked class by construction). */
-  private def morMasked(name: String, rels: Seq[String],
-      version: Int, rowPos: Boolean = false,
-      rowIds: Boolean = false): DataFrame = {
+    * (the mask's Filter sits between scan and aggregate). */
+  private[tables] def morMasked(name: String, rels: Seq[String],
+      version: Int, rowPos: Boolean = false, rowIds: Boolean = false,
+      maskCap: Long = TableStore.SpjMaskMaxBytes): DataFrame = {
     val entries = readDeleteEntries(name, version)
-    // no deletes, or no files: the plain indexed read (an empty `rels`
-    // is the empty frame — there are no mask classes to union)
     if (entries.isEmpty || rels.isEmpty)
       return indexedRead(name, rels, version, rowPos, rowIds)
-    // position deletes mask by (file, row ordinal) — inherently
-    // file-scoped, so the sequence-class machinery below only governs
-    // the EQUALITY entries; pos masks apply to the whole union and are
-    // no-ops for files their sidecars never name
-    val (posE, eqE) = entries.partition(e => TableStore.isPosEntry(e.cols))
-    val needPos = posE.nonEmpty || rowPos
-    val seqs = readSeqs(name, version)
-    val delSeqs = eqE.map(_.seq).distinct.sorted
     val inv = invPhysMap(name) // physical -> live logical name
-    eqE.foreach(e => e.cols.foreach(pc =>
-      require(inv.contains(pc), s"pending delete on $name keys column " +
-        s"$pc which is no longer in the schema")))
-    def classOf(r: String): Int = delSeqs.count(_ > seqs.getOrElse(r, 0))
-    val eqMasked = rels.groupBy(classOf).toSeq.sortBy(_._1).map { case (c, rs) =>
-      val base = indexedRead(name, rs, version, needPos, rowIds)
-      if (c == 0) base
-      else {
-        val applicable = delSeqs.takeRight(c).toSet
-        eqE.filter(e => applicable.contains(e.seq))
-          .groupBy(_.cols).foldLeft(base) { case (acc, (pcols, es)) =>
-            acc.join(eqDeleteKeys(name, es, pcols, inv), pcols.map(inv),
-              "left_anti")
-          }
+    entries.filterNot(e => TableStore.isPosEntry(e.cols)).foreach(e =>
+      e.cols.foreach(pc => require(inv.contains(pc),
+        s"pending delete on $name keys column $pc which is no longer " +
+          "in the schema")))
+    val mask = deleteMask(name, version, entries, ranges = false)
+    if (mask.bytes <= maskCap)
+      return indexedRead(name, rels, version, rowPos, rowIds, Some(mask))
+    logInfo(s"masked read of $name@$version uses anti-joins: its " +
+      s"delete mask is ${mask.bytes} bytes, over the $maskCap-byte cap")
+    antiJoinMasked(name, rels, version, entries, rowPos, rowIds)
+  }
+
+  /** The pending deletes `entries` of snapshot `version` as a
+    * [[DeleteMask]] — the one builder both masked readers plan from.
+    * `ranges` loads the equality sidecars' per-file key ranges, which
+    * only the SPJ scan's sidecar-file skipping uses. */
+  private def deleteMask(name: String, version: Int,
+      entries: Seq[DeleteEntry], ranges: Boolean): DeleteMask = {
+    def sidecarFiles(rel: String): Seq[(String, Long)] =
+      sidecarParts(name, rel).map(st => (st.getPath.toString, st.getLen))
+    val (posE, eqE) = entries.partition(e => TableStore.isPosEntry(e.cols))
+    DeleteMask(
+      eqE.map(e => EqDelete(e.cols, e.seq, sidecarFiles(e.rel),
+        if (ranges) readEqRanges(name, e.rel) else Map.empty)),
+      posE.map(e => PosDelete(e.cols == Seq(TableStore.DvMarker),
+        sidecarFiles(e.rel))),
+      readSeqs(name, version))
+  }
+
+  /** Sidecar read closures, one per schema: each carries a broadcast of
+    * the Hadoop configuration, which one per query would re-create. */
+  private val sidecarReads = new java.util.concurrent.ConcurrentHashMap[
+    StructType, PartitionedFile => Iterator[org.apache.spark.sql.catalyst.InternalRow]]()
+
+  /** Read closures for `mask`'s sidecars, equality keys read under their
+    * columns' types in `sch`, the reader's schema (a sidecar written
+    * before a [[widenColumn]] reads widened). */
+  private[tables] def maskReaders(mask: DeleteMask, sch: StructType): MaskReaders = {
+    def reader(s: StructType) = sidecarReads.computeIfAbsent(s, _ =>
+      GraftBatchScan.buildRead(spark,
+        new org.apache.hadoop.conf.Configuration(hconf), s, s))
+    def nullable(fs: Seq[StructField]) = StructType(fs.map(_.copy(nullable = true)))
+    MaskReaders(
+      mask.eq.map(_.cols).distinct.map { cs =>
+        val ks = nullable(cs.map(c => sch(c)))
+        cs -> ((ks, reader(ks)))
+      }.toMap,
+      if (mask.posFiles.isEmpty) None
+      else Some(reader(nullable(Seq(StructField(TableStore.PosFileCol, StringType),
+        StructField(TableStore.PosIdxCol, LongType))))),
+      if (mask.dvFiles.isEmpty) None
+      else Some(reader(nullable(DeletionVectors.dvSchema.fields.toSeq))))
+  }
+
+  /** [[MoRMaskFilter]] over `raw`, a file relation's physically named
+    * output, so renamed and widened key columns match the sidecars'
+    * physical names and declared types. The file sequences are re-keyed
+    * by the path the scan reports as `_metadata.file_path`. */
+  private def maskFilter(name: String, mask: DeleteMask,
+      raw: DataFrame): Column = {
+    val keyCols = mask.eq.flatMap(_.cols).distinct
+    val seqs = mask.fileSeqs.map { case (r, s) =>
+      new HPath(dataDir(name), r).toUri.toString -> s }
+    val rowIndex =
+      if (mask.pos.isEmpty) lit(-1L) else col("_metadata.row_index")
+    Bridge.column(MoRMaskFilter(mask.copy(fileSeqs = seqs),
+      maskReaders(mask, raw.schema), keyCols,
+      (Seq(col("_metadata.file_path"), rowIndex) ++
+        keyCols.map(c => col(s"`$c`"))).map(Bridge.expression)))
+  }
+
+  /** The masked read through joins, for a mask too large to hold per
+    * task: ONE indexed read carrying each row's file and ordinal,
+    * anti-joined per equality key-column set with each key's highest
+    * delete sequence (masking rows of files below it), then with the
+    * positional (file, ordinal) pairs. Null key components never join. */
+  private def antiJoinMasked(name: String, rels: Seq[String], version: Int,
+      entries: Seq[DeleteEntry], rowPos: Boolean,
+      rowIds: Boolean): DataFrame = {
+    val (posE, eqE) = entries.partition(e => TableStore.isPosEntry(e.cols))
+    val inv = invPhysMap(name)
+    val (fileSeq, delSeq) = ("__graft_file_seq", "__graft_del_seq")
+    // keyed as the read's PosFileCol names files
+    val seqs = readSeqs(name, version).map { case (r, s) =>
+      MaskSets.posKey(new HPath(dataDir(name), r).toUri.toString) -> s }
+    val read = indexedRead(name, rels, version, rowPos = true, rowIds)
+    val base = read.withColumn(fileSeq, coalesce(
+        try_element_at(typedLit(seqs), col(TableStore.PosFileCol)), lit(0)))
+    val eqMasked = eqE.groupBy(_.cols).toSeq.sortBy(_._1.mkString(","))
+      .foldLeft(base) { case (acc, (pcols, es)) =>
+        val ks = pcols.indices.map(i => s"__graft_del_k$i")
+        val keys = es.map(e => readEqSidecars(name, Seq(e), pcols, inv)
+            .toDF(ks: _*).withColumn(delSeq, lit(e.seq)))
+          .reduce(_ unionByName _)
+          .groupBy(ks.map(col): _*).agg(max(delSeq).as(delSeq))
+        acc.join(keys, pcols.zip(ks).map { case (p, k) =>
+            col(s"`${inv(p)}`") === col(k) }
+          .reduce(_ && _) && col(delSeq) > col(fileSeq), "left_anti")
       }
-    }.reduce(_ unionByName _)
-    val posMasked =
-      if (posE.isEmpty) eqMasked
-      else {
-        // normalize both sidecar formats to (file, bitmap): DV entries
-        // read as-is, legacy pair entries fold into bitmaps on the
-        // executors first. Small masks (by far the common case — DVs
-        // compress tombstones to runs) broadcast as a map and filter
-        // MAP-SIDE with a DvProbe predicate: no join, no shuffle, the
-        // scan's partitioning survives. Oversized masks fall back to
-        // exploding into a distributed pair anti-join — correct at any
-        // size, just not exchange-free.
-        val dvDf = posDvFrame(name, posE)
-        val sidecarBytes = posE.map(e =>
-          listStatusRec(new HPath(deletesDir(name), e.rel))
-            .filter(_.getPath.getName.endsWith(".parquet"))
-            .map(_.getLen).sum).sum
-        if (sidecarBytes <= TableStore.DvBroadcastMaxBytes) {
-          val merged = DeletionVectors.mergeDvs(dvDf)
-            .collect().map(r => r.getString(0) -> r.getAs[Array[Byte]](1))
-            .toMap
-          val bc = spark.sparkContext.broadcast(merged)
-          eqMasked.filter(DeletionVectors.notMaskedColumn(bc,
-            col(TableStore.PosFileCol), col(TableStore.PosIdxCol)))
-        } else {
-          val pairs = DeletionVectors.explodePairs(dvDf)
-          eqMasked.join(pairs,
-            Seq(TableStore.PosFileCol, TableStore.PosIdxCol), "left_anti")
-        }
-      }
-    // restore the TABLE's column order: a USING-column anti-join moves
-    // its join keys to the FRONT of the output, so an equality delete
-    // keyed on a non-first column silently reordered the masked frame —
-    // harmless to name-bound readers but fatal to POSITIONAL consumers
-    // (the streaming source maps batch attributes to the source schema
-    // by position). Caught by st_table_source_mor's oracle in round 9.
-    val tail =
-      (if (rowIds) Seq(TableStore.RowIdCol) else Nil) ++
-        (if (rowPos) Seq(TableStore.PosFileCol, TableStore.PosIdxCol)
-         else Nil)
-    val outCols = schema(name).fieldNames.toSeq ++ tail
-    val result =
-      if (rowPos) posMasked
-      else if (needPos)
-        posMasked.drop(TableStore.PosFileCol, TableStore.PosIdxCol)
-      else posMasked
-    result.select(outCols.map(c => col(s"`$c`")): _*)
+    val masked = if (posE.isEmpty) eqMasked
+      else eqMasked.join(DeletionVectors.explodePairs(posDvFrame(name, posE)),
+        Seq(TableStore.PosFileCol, TableStore.PosIdxCol), "left_anti")
+    // the plain read's columns in its order (a USING join moves its keys
+    // to the front)
+    masked.select(read.columns.filter(c => rowPos ||
+        (c != TableStore.PosFileCol && c != TableStore.PosIdxCol))
+      .map(c => col(s"`$c`")): _*)
   }
 
   /** Position-delete: record the (file, row ordinal) of every row
@@ -4142,7 +4186,7 @@ final class TableStore(private[tables] val spark: SparkSession,
     * ONLY — the second merge-on-read flavor (Iceberg's position delete
     * files). Cheaper than equality deletes when rows are identified by
     * predicate rather than key (no key columns needed, and masking is an
-    * exact file-scoped anti-join instead of key comparisons). The scan
+    * exact file-scoped bitmap probe instead of key comparisons). The scan
     * that finds ordinals is zone/bloom-pruned like any read; rows
     * already masked by PENDING deletes are never re-recorded. A later
     * append is untouched by construction — its file is named in no
@@ -4177,9 +4221,7 @@ final class TableStore(private[tables] val spark: SparkSession,
       hits: DataFrame): Boolean = {
     val out = new HPath(deletesDir(name), rel)
     DeletionVectors.fromPairsLocal(hits).write.parquet(out.toString)
-    val counts = listStatusRec(out)
-      .filter(_.getPath.getName.endsWith(".parquet"))
-      .map(st => footerRowCount(st.getPath))
+    val counts = sidecarParts(name, rel).map(st => footerRowCount(st.getPath))
     if (!counts.exists(c => !c.contains(0L))) { fs.delete(out, true); return false }
     val rows = counts.flatten.sum
     if (counts.forall(_.isDefined) && rows > TableStore.DvCompactRowThreshold) {
@@ -4215,8 +4257,7 @@ final class TableStore(private[tables] val spark: SparkSession,
     val rel = s"pos-${java.util.UUID.randomUUID()}"
     val out = new HPath(deletesDir(name), rel)
     hits.write.parquet(out.toString)
-    val wrote = listStatusRec(out)
-      .filter(_.getPath.getName.endsWith(".parquet"))
+    val wrote = sidecarParts(name, rel)
       .exists(st => !footerRowCount(st.getPath).contains(0L))
     if (!wrote) { fs.delete(out, true); return }
     commitManifest(name, base, Set.empty, Nil, Nil,
@@ -4311,7 +4352,7 @@ final class TableStore(private[tables] val spark: SparkSession,
             (if (e.cols == Seq(TableStore.DvMarker)) readDvSidecar(name, e)
              else spark.read.parquet(
                new HPath(deletesDir(name), e.rel).toString))
-            .select(col(col0Name(posE)).as("f")))
+            .select(col(TableStore.PosFileCol).as("f")))
           .reduce(_ unionByName _).distinct()
           .collect().map(_.getString(0)).toSet
         rels.filter(named.contains).toSet
@@ -4323,7 +4364,7 @@ final class TableStore(private[tables] val spark: SparkSession,
       else {
         // rewrite candidates with their fully-masked content — the
         // masked read itself applies exactly the right deletes per
-        // sequence class, so a file touched by BOTH kinds is rewritten
+        // file sequence, so a file touched by BOTH kinds is rewritten
         // once with both applied (row ids materialize under lineage)
         val survivors = morMasked(name, candidates.toSeq.sorted, base,
           rowIds = lineage)
@@ -4357,10 +4398,7 @@ final class TableStore(private[tables] val spark: SparkSession,
       "maintain_deletes thresholds must be positive")
     val entries = readDeleteEntries(name, currentVersion(name))
     if (entries.isEmpty) return ("none", 0, 0)
-    val bytes = entries.map(e =>
-      listStatusRec(new HPath(deletesDir(name), e.rel))
-        .filter(_.getPath.getName.endsWith(".parquet"))
-        .map(_.getLen).sum).sum
+    val bytes = entries.flatMap(e => sidecarParts(name, e.rel)).map(_.getLen).sum
     if (bytes > maxBytes) {
       val before = entries.size
       materializeDeletes(name)
@@ -4385,8 +4423,8 @@ final class TableStore(private[tables] val spark: SparkSession,
     * `rewrite_position_delete_files` analogue): merges many small
     * pending sidecars into fewer WITHOUT touching any data file.
     * Update-heavy merge-on-read tables accumulate one sidecar per
-    * commit, and every masked read pays per entry (a sidecar open plus
-    * a per-class anti-join), so folding them keeps read cost flat
+    * commit, and every masked read pays per entry (a sidecar load and a
+    * key-set probe per row), so folding them keeps read cost flat
     * between full [[materializeDeletes]] runs — which rewrite data
     * files and are the expensive maintenance step this one defers.
     *
@@ -4459,10 +4497,6 @@ final class TableStore(private[tables] val spark: SparkSession,
     (entries.size, next.size)
   }
 
-  /** First column name of a positional sidecar (written as
-    * (PosFileCol, PosIdxCol); tolerated by name for forward compat). */
-  private def col0Name(posE: Seq[DeleteEntry]): String = TableStore.PosFileCol
-
   /** Net CDC application in ONE snapshot commit: drop every row whose key
     * appears in `keys`, then add `newRows` — the atomic replacement for the
     * reference's non-atomic delete-then-insert update
@@ -4507,12 +4541,28 @@ final class TableStore(private[tables] val spark: SparkSession,
     var removed = Set.empty[String]
     var rewritten = Seq.empty[String]
     if (rels.nonEmpty) {
+      // one key column whose IN-list membership is SQL equality, at most
+      // BloomProbeMaxKeys keys: collect them once and serve the key bounds,
+      // the bloom probe and both joins below from that list
+      val keyList: Option[Seq[Row]] = keyCols match {
+        case Seq(k) if TableStore.inListExact(sch(k).dataType) =>
+          val got = distinctKeys.limit(TableStore.BloomProbeMaxKeys + 1)
+            .collect().toSeq
+          if (got.length > TableStore.BloomProbeMaxKeys) None else Some(got)
+        case _ => None
+      }
+      // null keys match nothing, as under the joins' equality
+      val keyIn = keyList.map { rows =>
+        col(s"`${keyCols.head}`").isInCollection(
+          rows.flatMap(r => Option(r.get(0))).distinct)
+      }
       // Stage 1 — metadata pruning: zone maps discard files whose key
       // RANGE cannot intersect the batch (clustered layouts); blooms then
       // discard survivors that provably hold NONE of the batch's keys
       // (any layout — the random-key CDC case zone maps can't touch).
       // Manifest + sidecar reads only, no data file opened.
-      val candidates = pruneByKeys(name, rels, distinctKeys, keyCols, base)
+      val candidates =
+        pruneByKeys(name, rels, distinctKeys, keyCols, base, keyList)
       if (candidates.nonEmpty) {
         val candidatePaths = candidates.map(r => new HPath(dataDir(name), r).toString)
         // Stage 2 — exact pruning: a semi join over the candidates marks
@@ -4523,17 +4573,21 @@ final class TableStore(private[tables] val spark: SparkSession,
         // Each task de-duplicates its own file names (a handful): one
         // job, no exchange.
         val str = org.apache.spark.sql.Encoders.STRING
-        val affected = readFiles(name, candidatePaths)
+        val withFile = readFiles(name, candidatePaths)
           .withColumn("__file", input_file_name())
-          .join(distinctKeys, keyCols, "left_semi")
+        val affected = keyIn.fold(
+            withFile.join(distinctKeys, keyCols, "left_semi"))(
+            withFile.filter)
           .select(col("__file")).as(str)
           .mapPartitions(_.toSet.iterator)(str)
           .collect().map(fileName).toSet
         if (affected.nonEmpty) {
           val affectedPaths = candidatePaths.filter(p => affected.contains(fileName(p)))
-          val survivors = readFiles(name, affectedPaths,
+          val affectedRows = readFiles(name, affectedPaths,
             rowIdsAt = if (lineage) Some(base) else None)
-            .join(distinctKeys, keyCols, "left_anti")
+          val survivors = keyIn.fold(
+              affectedRows.join(distinctKeys, keyCols, "left_anti"))(in =>
+              affectedRows.filter(col(s"`${keyCols.head}`").isNull || !in))
           rewritten = writeDataFiles(name, survivors)
           removed = rels.filter(r => affected.contains(fileName(r))).toSet
         }
@@ -4574,13 +4628,13 @@ final class TableStore(private[tables] val spark: SparkSession,
     * pruning against `version`'s metadata, each failing open. */
   private def pruneByKeys(name: String, rels: Seq[String],
       distinctKeys: DataFrame, keyCols: Seq[String],
-      version: Int): Seq[String] =
+      version: Int, keyList: Option[Seq[Row]] = None): Seq[String] =
     pruneByBlooms(name,
       pruneByBucketDirs(name,
-        pruneByZones(name, rels, keyBounds(name, distinctKeys, keyCols),
-          version),
+        pruneByZones(name, rels,
+          keyBounds(name, distinctKeys, keyCols, keyList), version),
         distinctKeys, keyCols),
-      distinctKeys, keyCols, version)
+      distinctKeys, keyCols, version, keyList)
 
   // ---- metadata-only aggregates -------------------------------------------
 
@@ -4805,7 +4859,7 @@ final class TableStore(private[tables] val spark: SparkSession,
     * sidecars and non-bloom'd columns count as hits (fail open). */
   private def pruneByBlooms(name: String, rels: Seq[String],
       distinctKeys: DataFrame, keyCols: Seq[String],
-      version: Int): Seq[String] = {
+      version: Int, keyList: Option[Seq[Row]] = None): Seq[String] = {
     if (rels.isEmpty) return rels
     val bc = bloomCols(name)
     if (bc.isEmpty) return rels
@@ -4817,8 +4871,9 @@ final class TableStore(private[tables] val spark: SparkSession,
     // batch with many distinct composite keys but few distinct probed
     // values must not skip pruning, and duplicate projected tuples must
     // not inflate the loop
-    val tuples = distinctKeys.select(probed.map(col): _*).distinct()
-      .limit(TableStore.BloomProbeMaxKeys + 1).collect()
+    val tuples = keyList.filter(_ => probed == keyCols).getOrElse(
+      distinctKeys.select(probed.map(col): _*).distinct()
+        .limit(TableStore.BloomProbeMaxKeys + 1).collect().toSeq)
     if (tuples.isEmpty || tuples.length > TableStore.BloomProbeMaxKeys) return rels
     // normalize to the probe domain; a tuple with a null key component
     // never equality-matches any row and cannot make a file necessary
@@ -5973,7 +6028,8 @@ final class TableStore(private[tables] val spark: SparkSession,
     * columns participate. `keyCols` are logical; the returned map keys on
     * PHYSICAL names (what the stats sidecars use). */
   private def keyBounds(name: String, keys: DataFrame,
-      keyCols: Seq[String]): Map[String, (Any, Any)] = {
+      keyCols: Seq[String],
+      keyList: Option[Seq[Row]] = None): Map[String, (Any, Any)] = {
     val zc = zoneCols(name)
     val m = physMap(name)
     // hidden time/truncate partition sources prune like zone columns
@@ -5985,9 +6041,6 @@ final class TableStore(private[tables] val spark: SparkSession,
     val cols = keyCols.filter(c => zc.contains(physOf(m, c)) ||
       hiddenRange.contains(physOf(m, c)))
     if (cols.isEmpty) return Map.empty
-    val aggs = cols.flatMap(c => Seq(min(col(c)), max(col(c))))
-    // one task over the (tombstone-sized) keys: no exchange, one job
-    val row = keys.coalesce(1).agg(aggs.head, aggs.tail: _*).collect()(0)
     // temporal collect types → the stat domain (micros / epoch days as
     // Long), so bounds compare against zone stats and the synthetic
     // hidden-partition bounds; other types pass through unchanged
@@ -5999,6 +6052,17 @@ final class TableStore(private[tables] val spark: SparkSession,
       case d: java.sql.Date           => DateTimeUtils.fromJavaDate(d).toLong
       case d: java.time.LocalDate     => d.toEpochDay
       case other                      => other
+    }
+    val row = keyList match {
+      // collected keys (one key column): their bounds on the driver
+      case Some(rows) if cols == keyCols =>
+        val vs = rows.flatMap(r => Option(r.get(0))).map(statDomain)
+          .sortWith((a, b) => ZoneStats.cmp(a, b).exists(_ < 0))
+        Row(vs.headOption.orNull, vs.lastOption.orNull)
+      case _ =>
+        val aggs = cols.flatMap(c => Seq(min(col(c)), max(col(c))))
+        // one task over the (tombstone-sized) keys: no exchange, one job
+        keys.coalesce(1).agg(aggs.head, aggs.tail: _*).collect()(0)
     }
     cols.zipWithIndex.flatMap { case (c, i) =>
       val (lo, hi) = (row.get(2 * i), row.get(2 * i + 1))
@@ -6850,29 +6914,24 @@ object TableStore {
     * upgrade to DV whenever [[TableStore.rewriteDeletes]] merges them. */
   private[tables] val DvMarker: String = "#dv"
 
+  /** Types whose IN-list membership is exactly SQL equality (no float
+    * -0.0/NaN normalization, no collation), so a collected key list can
+    * stand in for an equality join on them. */
+  private[tables] def inListExact(t: org.apache.spark.sql.types.DataType): Boolean =
+    t match {
+      case ByteType | ShortType | IntegerType | LongType | DateType |
+          TimestampType | TimestampNTZType => true
+      case other => other == StringType
+    }
+
   /** Positional entry of either format. */
   private[tables] def isPosEntry(cols: Seq[String]): Boolean =
     cols == Seq(PosMarker) || cols == Seq(DvMarker)
-
-  /** Largest total positional-sidecar byte size the V1 masked read will
-    * broadcast as a deletion-vector map (the map-side mask that avoids
-    * an anti-join shuffle). Above it, masking falls back to exploding
-    * the bitmaps into a distributed pair anti-join — still correct,
-    * no driver/executor map to hold. Compressed bitmaps make this cap
-    * ~an order of magnitude harder to hit than the pair format it
-    * replaced (SCALE.md round 9). */
-  private[tables] val DvBroadcastMaxBytes: Long = 256L * 1024 * 1024
 
   /** Above this many written DV sidecar rows, [[writeDvSidecar]] checks
     * task-level duplication and compacts with one bitmap-row merge pass.
     * Below it, duplicate rows per file are cheaper than a second job. */
   private[tables] val DvCompactRowThreshold: Long = 128L
-
-  /** Per-executor budget for CACHED deserialized DV probe maps
-    * ([[DeletionVectors.cachedBitmaps]]): each masked V1 read creates a
-    * fresh broadcast, so without a byte bound the cache would grow with
-    * query count for the executor's lifetime. */
-  private[tables] val DvProbeCacheMaxBytes: Long = 512L * 1024 * 1024
 
   /** Per-executor budget for CACHED built SPJ delete masks
     * ([[SpjMaskCache]]): one entry can expand up to [[SpjMaskMaxBytes]]
@@ -6896,12 +6955,12 @@ object TableStore {
     * `coalesce(materialized, first_row_id + ordinal)`. */
   val RowIdCol: String = "_row_id"
 
-  /** Largest total pending-delete sidecar byte size the SPJ batch scan
-    * will mask in its readers. Per-task sidecar re-reading is the
-    * Iceberg MoR trade (cost = tasks × sidecar bytes, each set held in
-    * executor memory); a table that has accumulated more pending
-    * tombstones than this stays on the V1 masked read until maintenance
-    * folds them ([[TableStore.materializeDeletes]] / compaction). */
+  /** Largest total pending-delete sidecar byte size a masked read holds
+    * in executor memory. Loading sidecars per executor is the Iceberg
+    * MoR trade (each set held in memory); above this the SPJ batch scan
+    * declines and the V1 read masks through anti-joins instead, until
+    * maintenance folds the tombstones ([[TableStore.materializeDeletes]]
+    * / compaction). */
   private[graft] val SpjMaskMaxBytes: Long = 256L * 1024 * 1024
 
   /** Change-feed label columns (the Delta-CDF spellings, so downstream
@@ -6934,18 +6993,6 @@ object TableStore {
       pSchema: org.apache.spark.sql.types.StructType,
       dataSch: org.apache.spark.sql.types.StructType,
       physSch: org.apache.spark.sql.types.StructType)
-
-  /** One pending equality-delete sidecar as the SPJ batch reader sees
-    * it: key columns (physical == logical under the no-rename gate),
-    * the commit sequence it applies FROM (masks only files with a lower
-    * recorded sequence), and its parquet part files (path, length). */
-  /** `ranges`: per sidecar FILE NAME, per key column, the file's (min,
-    * max) in the stat domain — present when the sidecar was written
-    * key-sorted ([[TableStore.writeEqSidecar]]). Empty = pre-range
-    * sidecar; readers fall back to reading every file. */
-  private[tables] final case class SpjEqDelete(cols: Seq[String], seq: Int,
-      files: Seq[(String, Long)],
-      ranges: Map[String, Map[String, (Any, Any)]] = Map.empty)
 
   /** Worst single-point stabbing weight of an entry's sidecar files on
     * key column `c`: the max total bytes of files whose [min, max] on
@@ -7005,17 +7052,6 @@ object TableStore {
     }
   }
 
-  /** Pending merge-on-read delete state the SPJ batch reader must apply
-    * per data file (Iceberg-style: each read task re-reads the small
-    * applicable sidecars and masks in memory, so the bucket layout —
-    * and with it the zero-exchange join — survives CDC tombstones).
-    * `fileSeqs` maps data-file rel paths to their recorded sequence;
-    * an absent file predates every pending delete. */
-  private[tables] final case class SpjDeleteMask(eq: Seq[SpjEqDelete],
-      posFiles: Seq[(String, Long)],
-      dvFiles: Seq[(String, Long)],
-      fileSeqs: Map[String, Int])
-
   /** Inputs of the storage-partitioned-join batch scan (see
     * [[TableStore.spjPlan]]): the snapshot version it was planned
     * against, the all-bucket partition spec in layout order, the
@@ -7025,7 +7061,7 @@ object TableStore {
   private[tables] final case class SpjPlan(version: Int,
       fields: Seq[PartitionField],
       bundle: ZoneIndexBundle,
-      mask: Option[SpjDeleteMask])
+      mask: Option[DeleteMask])
 
   /** Structural name/type equality at every nesting level — true when no
     * logical→physical rename exists anywhere, so logical rows ARE
